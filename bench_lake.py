@@ -100,8 +100,8 @@ def main() -> None:
     cat.insert_into("b", "dv", li)
     cat.delete_where("b", "dv", F.col("l_orderkey") % 20 == 0)
 
-    # DV point-delete twin: one deleted key → the r10 clean/dirty split
-    # position-joins only the file(s) holding the mark; the rest scan plain.
+    # DV point-delete twin: one deleted key → one mark; the read still
+    # scans every file with row_index and broadcast-anti-joins that mark.
     cat.create_table(
         "b", "dvp", cols, primary_key=pk,
         options={"deletion-vectors.enabled": "true"},

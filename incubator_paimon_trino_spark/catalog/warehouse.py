@@ -775,8 +775,8 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             )
         snap = self._pin_snapshot(tdir, version_as_of, timestamp_as_of, tag)
         # r12 (VERDICT r11 item 4): SESSION PLAN-FRAGMENT CACHE. The driver
-        # pays a fixed ~0.1s of py4j plan assembly per read (DV position-set
-        # broadcast, merge composition, char padding); snapshots are
+        # pays a fixed ~0.1s of py4j plan assembly per read (DV marks
+        # side, merge composition, char padding); snapshots are
         # immutable and every plan-shaping input is in the key — snapshot
         # id, schema id (bumped by DDL and SET PROPERTIES), the read flavor
         # flags, and the broadcast threshold the DV/delta bounds derive
@@ -847,53 +847,20 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
         # O(1) — most DV-table snapshots carry no marks at all. None =
         # legacy snapshot without the count: assume marks (old behavior).
         has_dv = bool(dv_mode and snap.dv and snap.dv_marks != 0)
-        dirty = self._dv_dirty_files(tdir, snap) if has_dv else None
-        if dirty is None:
-            df = self._read_files(tdir, schema, snap, with_pos=has_dv)
-        if has_dv and dirty is not None:
-            # CLEAN/DIRTY split (r10 — the dv_read residual in PROFILE_r10):
-            # an inline index names its mark-bearing files in one bounded
-            # driver parse (the same O(threshold) contract the commit-side
-            # fold uses), so files WITHOUT marks scan plain — no
-            # _metadata.row_index read, no anti-join — and only dirty files
-            # pay the position filter. A point DELETE then taxes one file,
-            # not the table. Sharded indexes (dirty is None) keep the
-            # all-files join: enumerating their file names is O(live
-            # deleted rows), the bound r9 removed from the driver.
-            user_cols = [f.name for f in schema.fields]
-            clean = [e for e in snap.files if os.path.basename(e["path"]) not in dirty]
-            hot = [e for e in snap.files if os.path.basename(e["path"]) in dirty]
-            parts = []
-            if clean:
-                parts.append(
-                    self._read_files(
-                        tdir, schema, dataclasses.replace(snap, files=clean)
-                    ).select(*user_cols)
-                )
-            if hot:
-                d = self._read_files(
-                    tdir, schema, dataclasses.replace(snap, files=hot), with_pos=True
-                )
-                parts.append(
-                    self._dv_apply_distributed(d, tdir, snap, schema).select(*user_cols)
-                )
-            if not parts:
-                df = self.spark.createDataFrame([], schema.spark_schema())
-            else:
-                df = parts[0]
-                for p in parts[1:]:
-                    df = df.unionByName(p)
-        elif dv_mode:
+        df = self._read_files(tdir, schema, snap, with_pos=has_dv)
+        if dv_mode:
             # deletion-vector read: scan − DV IS the merged state (every
             # superseded row version is position-marked at write time and
             # -D rows are never stored), so the whole merge-on-read
             # groupBy/shuffle disappears — filters and projections push
-            # straight into the file scan. The marks side is a Spark read
-            # of the committed index (r8: never a driver dict — see
-            # _dv_apply_distributed). with_system_columns still exposes
-            # the raw unfiltered changelog view, like non-DV tables.
+            # straight into the file scan. Every DV read, inline or sharded
+            # index, takes the one path: scan with ``row_index``, then
+            # anti-join the marks Spark reads from the committed index
+            # (``_dv_anti_join``, shared with the commit's mark scan).
+            # with_system_columns still exposes the raw unfiltered
+            # changelog view, like non-DV tables.
             if has_dv:
-                df = self._dv_apply_distributed(df, tdir, snap, schema)
+                df = self._dv_anti_join(df, tdir, snap)
             df = df.select(*[f.name for f in schema.fields])
         elif (
             schema.primary_key

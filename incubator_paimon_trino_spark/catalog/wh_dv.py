@@ -10,92 +10,24 @@ assembled in ``warehouse.py``.
 from __future__ import annotations
 
 import dataclasses
-import datetime as _dt
 import uuid
 import glob
 import os
 import re
 import shutil
-import time
-import warnings
 
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from incubator_paimon_trino_spark.catalog.metadata import (
-    COMMIT_APPEND,
-    COMMIT_COMPACT,
-    COMMIT_OVERWRITE,
-    KIND_COL,
-    SEQ_COL,
-    CommitConflictError,
-    Field,
     Snapshot,
     TableSchema,
-    _parse_type as _meta_parse_type,
-    load_snapshots,
     read_json,
     write_json_atomic,
 )
-from incubator_paimon_trino_spark.catalog.file_index import (
-    SUFFIX as _FIDX_SUFFIX,
-    _split_cols,
-    build_file_indexes,
-    index_specs as _file_index_specs,
-    prune_files_by_index,
-)
-from incubator_paimon_trino_spark.catalog.scan import (
-    _HIVE_NULL,
-    collect_file_stats,
-    partition_values,
-    prune_files,
-)
-from incubator_paimon_trino_spark.functions.types import (
-    castable_ddl,
-    char_length,
-    paimon_to_spark,
-    spark_to_paimon,
-    timestamp_precision,
-)
+from incubator_paimon_trino_spark.catalog.scan import prune_files
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
-
-
-def _dv_keep_udf(spark: SparkSession, by_hash: dict):
-    """Arrow-batched keep-row predicate for the DV position-set pushdown:
-    ``by_hash`` ({crc32(file basename) int64 → SORTED int64 numpy
-    positions}, bounded by the caller's broadcast-rows check) ships to
-    executors as a Spark broadcast. The caller hashes the basename JVM-side
-    (``F.crc32`` == ``zlib.crc32`` — the same pairing the sharded index's
-    bucketing relies on), so only two INT64 columns cross the Arrow bridge
-    — shipping the path strings themselves was 6x the bytes and the
-    dominant cost of the first cut. Each batch factorizes its (almost
-    always single-valued) file-hash column and binary-searches the file's
-    position array with ``np.searchsorted``."""
-    import numpy as np
-
-    bc = spark.sparkContext.broadcast(by_hash)
-
-    @F.pandas_udf("boolean")
-    def _keep(hash_col: pd.Series, pos_col: pd.Series) -> pd.Series:
-        h = hash_col.to_numpy(dtype=np.int64, copy=False)
-        pos = pos_col.to_numpy(dtype=np.int64, copy=False)
-        out = np.ones(len(h), dtype=bool)
-        vectors = bc.value
-        for u in np.unique(h):
-            ps = vectors.get(int(u))
-            if ps is None or not len(ps):
-                continue
-            m = h == u
-            p = pos[m]
-            idx = np.searchsorted(ps, p)
-            idx_c = np.minimum(idx, len(ps) - 1)
-            out[m] = ps[idx_c] != p
-        return pd.Series(out)
-
-    return _keep
 
 
 class DeletionVectorMixin:
@@ -141,23 +73,6 @@ class DeletionVectorMixin:
             out.update(doc.get("vectors", {}))
         return out
 
-    def _dv_dirty_files(self, tdir: str, snap: Snapshot | None) -> "set[str] | None":
-        """Basenames of the MARK-BEARING files when the snapshot's index is
-        INLINE — one bounded driver parse (the same O(inline-threshold)
-        contract the commit-side fold already uses), read-path-legal unlike
-        ``_dv_vectors``. Returns None for SHARDED indexes (their file names
-        live inside per-bucket shard documents; enumerating them is O(live
-        deleted rows), the driver bound r9 removed) — callers then keep the
-        all-files position join. Missing index → empty set (no marks)."""
-        from incubator_paimon_trino_spark.catalog.dv_index import load_index_meta
-
-        meta = load_index_meta(tdir, snap.dv if snap else None)
-        if meta is None:
-            return set()
-        if meta["kind"] != "inline":
-            return None
-        return {os.path.basename(k) for k in meta["vectors"]}
-
     def _dv_marks_df(self, tdir: str, dv_name: str | None) -> DataFrame | None:
         """The index's marks as a Spark-read DataFrame (file basename,
         position) — the ONE way marks reach any read/stream plan. Inline or
@@ -185,7 +100,8 @@ class DeletionVectorMixin:
     # scale a 2M-row broadcast of wide-PK structs could exceed executor
     # broadcast memory. Both bounds now derive from the SAME config Spark
     # itself sizes broadcasts with — spark.sql.autoBroadcastJoinThreshold
-    # (bytes) ÷ an estimated row width — and each is overridable per table.
+    # (bytes) ÷ an estimated row width; the delta bound is also overridable
+    # per table.
 
     #: conservative per-type width estimates (bytes) for broadcast sizing —
     #: unparameterized strings/binary assume 32B payloads
@@ -233,13 +149,6 @@ class DeletionVectorMixin:
             width, schema.options.get("merge_read_delta_broadcast_rows")
         )
 
-    def _dv_pushdown_rows(self, schema: TableSchema) -> int:
-        """DV position-filter bound: a mark row is a file basename (~45B)
-        plus a bigint position. Override: ``deletion-vectors.broadcast-rows``."""
-        return self._broadcast_rows_bound(
-            64, schema.options.get("deletion_vectors_broadcast_rows")
-        )
-
     def _delta_base_split(
         self, tdir: str, schema: TableSchema, snap: Snapshot
     ) -> "tuple[DataFrame, DataFrame] | None":
@@ -262,115 +171,48 @@ class DeletionVectorMixin:
         delta = self._read_files(tdir, schema, dataclasses.replace(snap, files=delta_files))
         return base, delta
 
-    def _dv_position_sets(self, tdir: str, snap: Snapshot) -> "dict | None":
-        """{file basename → sorted int64 numpy positions} for the snapshot's
-        marks — a DIRECT driver parse of the index documents, BOUNDED by the
-        caller's ``dv_marks ≤ _dv_pushdown_rows`` check (the same
-        explicit-contract shape as the inline fold's threshold bound; the
-        unbounded case never reaches here — it keeps the distributed
-        anti-join). A Spark job here would put a blocking ~0.3s collect in
-        every plan build (measured: bench_lake dv_read 2.2x → 4.7x), for
-        marks a bounded json parse reads in milliseconds. Index files are
-        immutable and nonce-named, so results cache per (tdir, name).
-        None = no marks."""
-        import numpy as np
+    def _dv_anti_join(self, df: DataFrame, tdir: str, snap: Snapshot) -> DataFrame:
+        """Drop the rows ``snap``'s deletion vectors mark: the ONE mark
+        application, shared by every DV read (``read_table``) and the DV
+        commit's mark scan (``_dv_build``, so a commit never re-marks a row
+        an earlier commit already killed). ``df`` carries the provenance
+        columns of ``_read_files(with_pos=True)``; the result keeps them,
+        with ``_DV_FILE`` reduced to the basename the index keys on.
 
-        from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
+        The marks side is read BY SPARK from the committed index, inline or
+        sharded (``_dv_marks_df``), never parsed on the driver. It carries a
+        broadcast hint when the snapshot's recorded cumulative count fits
+        ``autoBroadcastJoinThreshold`` at 64 B a mark: a JSON-parsed side
+        has no stats, and without the hint AQE sort-merge-joined a 23k-mark
+        index against the scan (bench_lake, the join was 2/3 of a 3x read
+        overhead). Above the bound, or with no recorded count, AQE picks
+        the strategy. No marks (``dv_marks == 0``, or the index reaped by
+        expiry) → ``df`` unjoined.
 
-        if not snap.dv:
-            return None
-        key = (tdir, snap.dv)
-        cache = getattr(self, "_dv_posset_cache", None)
-        if cache is None:
-            cache = self._dv_posset_cache = {}
-        if key in cache:
-            return cache[key]
-        merged: dict[str, set] = {}
-        found = False
-        for name in mark_file_names(tdir, snap.dv):
-            try:
-                doc = read_json(os.path.join(tdir, "index", name))
-            except FileNotFoundError:
-                continue
-            found = True
-            for rel, ps in doc.get("vectors", {}).items():
-                base = os.path.basename(rel.replace("\\", "/"))
-                merged.setdefault(base, set()).update(ps)
-        out = (
-            {b: np.array(sorted(ps), dtype=np.int64) for b, ps in merged.items()}
-            if found
-            else None
-        )
-        if len(cache) >= 8:  # tiny LRU: reads cluster on few snapshots
-            cache.pop(next(iter(cache)))
-        cache[key] = out
-        return out
+        Kept as the only arm by measurement (local[4], 4 cores / 15 GiB,
+        sf0.1 ``lineitem`` of 600k rows, 10 interleaved pairs, plan cache
+        cleared per read, median sum+count read):
 
-    def _dv_apply_distributed(
-        self, df: DataFrame, tdir: str, snap: Snapshot, schema: TableSchema | None = None
-    ) -> DataFrame:
-        """Drop DV-marked rows. Two strategies, chosen from snapshot
-        metadata alone (``snap.dv_marks`` — no job):
-
-        - **Position-set pushdown** (r11, VERDICT r10 item 3): when the
-          cumulative mark count fits the config-derived broadcast bound,
-          the per-file sorted position arrays broadcast to the executors
-          and an Arrow-batched vectorized binary search
-          (``np.searchsorted``) filters ``_metadata.row_index`` directly —
-          NO join in the plan at all, and no per-row string basename
-          extraction (file paths factorize per Arrow batch, ~1 distinct
-          path each, since scan tasks read one file at a time).
-        - **Distributed anti-join** (the r8 path) otherwise: the marks side
-          is read BY SPARK from the committed index (never the driver) and
-          the join strategy is left to AQE. A sharded index reads as many
-          small per-bucket parse tasks; an index reaped by expiry reads as
-          no-marks."""
-        bound = self._dv_pushdown_rows(schema) if schema is not None else 0
-        if snap.dv_marks is not None and 0 < snap.dv_marks <= bound:
-            per_file = self._dv_position_sets(tdir, snap)
-            if per_file is None:
-                return df.drop(_DV_FILE, _DV_POS)
-            import zlib
-
-            by_hash = {
-                zlib.crc32(b.encode("utf-8")): ps for b, ps in per_file.items()
-            }
-            # ADVICE r11: the filter keys on crc32(basename), so a collision
-            # between a MARKED file and ANY other data file in the snapshot
-            # (marked or not) would silently delete the colliding file's
-            # rows at the marked positions. Require crc32 to be injective
-            # over the union of marked + live basenames (O(live files) on
-            # metadata already in hand) — any collision falls back to the
-            # exact-basename anti-join below.
-            all_bases = set(per_file) | {
-                os.path.basename(e["path"].replace("\\", "/")) for e in snap.files
-            }
-            if len({zlib.crc32(b.encode("utf-8")) for b in all_bases}) == len(
-                all_bases
-            ):
-                keep = _dv_keep_udf(self.spark, by_hash)
-                fhash = F.crc32(
-                    F.encode(F.substring_index(F.col(_DV_FILE), "/", -1), "UTF-8")
-                ).cast("bigint")
-                return df.filter(keep(fhash, F.col(_DV_POS))).drop(
-                    _DV_FILE, _DV_POS
-                )
-        marks = self._dv_marks_df(tdir, snap.dv) if snap.dv else None
+        - vs a position-set pushdown (per-file sorted positions broadcast,
+          a pandas-UDF ``np.searchsorted`` on ``row_index``): 5% uniform
+          delete 0.961 vs 0.965 s (won 5/10), point delete 0.621 vs
+          0.699 s (9/10), 20k-row table after a 3% upsert + 4% delete
+          0.336 vs 0.439 s (9/10);
+        - vs an inline-index clean/dirty split (unmarked files scanned
+          without ``row_index``): 0.584 vs 0.585 s (5/10), 0.491 vs
+          0.547 s (9/10), 0.307 vs 0.308 s (6/10);
+        - the hint on the commit's mark scan is neutral: 3.58 → 3.08 s on
+          the 600k-row table, 1.60 → 1.65 s on the 20k-row one (6 commits
+          each)."""
         df = df.withColumn(_DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1))
-        if marks is not None:
-            hint = self._broadcast_rows_bound(
-                64, schema.options.get("deletion_vectors_broadcast_rows") if schema else None
-            )
-            if snap.dv_marks is not None and snap.dv_marks <= hint:
-                # schema-less callers skip pushdown but still deserve the
-                # hint: a JSON-parsed side has no stats, and without it AQE
-                # sort-merge-joined a 23k-mark index against the scan
-                # (bench_lake r10: the join was 2/3 of the 3x overhead).
-                # Above the bound, AQE decides — forcing a broadcast larger
-                # than Spark's own threshold is exactly the r10 nit.
-                marks = F.broadcast(marks)
-            df = df.join(marks, [_DV_FILE, _DV_POS], "left_anti")
-        return df.drop(_DV_FILE, _DV_POS)
+        if not snap.dv or snap.dv_marks == 0:
+            return df
+        marks = self._dv_marks_df(tdir, snap.dv)
+        if marks is None:
+            return df
+        if snap.dv_marks is not None and snap.dv_marks <= self._broadcast_rows_bound(64, None):
+            marks = F.broadcast(marks)
+        return df.join(marks, [_DV_FILE, _DV_POS], "left_anti")
 
     def _dv_build(
         self,
@@ -386,8 +228,8 @@ class DeletionVectorMixin:
 
         The mark scan is fully distributed: live files are read with native
         row positions (``_metadata.row_index``), prev's marks drop the
-        already-dead rows via the same distributed anti-join every read
-        uses, and a LEFT SEMI join against the batch's DISTINCT keys finds
+        already-dead rows via the same ``_dv_anti_join`` every read uses,
+        and a LEFT SEMI join against the batch's DISTINCT keys finds
         the superseded positions. What happens to the hits then depends on
         the CUMULATIVE size (decided from ``prev.dv_marks`` + a distributed
         count — never a parse):
@@ -436,13 +278,9 @@ class DeletionVectorMixin:
                 )
                 scan_snap = dataclasses.replace(prev, files=pruned)
             if scan_snap.files:
-                old = self._read_files(tdir, schema, scan_snap, with_pos=True)
-                old = old.withColumn(
-                    _DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1)
+                old = self._dv_anti_join(
+                    self._read_files(tdir, schema, scan_snap, with_pos=True), tdir, prev
                 )
-                prev_marks = self._dv_marks_df(tdir, prev.dv) if prev.dv else None
-                if prev_marks is not None:
-                    old = old.join(prev_marks, [_DV_FILE, _DV_POS], "left_anti")
                 hits = old.join(keys, pk, "left_semi").select(
                     _DV_FILE, F.col(_DV_POS).cast("bigint").alias(_DV_POS)
                 )

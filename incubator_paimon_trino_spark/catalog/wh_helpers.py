@@ -75,18 +75,19 @@ _SYSTEM_SUFFIXES = (
 )
 
 #: Deletion-vector provenance columns (never user-visible: appended by
-#: ``_read_files(with_pos=True)`` and consumed/dropped by ``_dv_apply``).
+#: ``_read_files(with_pos=True)`` and consumed by ``_dv_anti_join``).
 _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
 
 
 def explode_dv_index_text(df: DataFrame, ver_col=None) -> DataFrame:
     """(file basename, position) marks from wholetext DV index JSON rows —
-    the ONE parse/explode pipeline shared by the batch DV read
-    (``_dv_apply_distributed``), the retraction stream's marks side, and
-    its resume baseline (``streaming/changelog.py``), so no two paths can
-    disagree on path normalization. ``ver_col`` (optional expression) rides
-    along as ``_dv_ver``. An index that does not parse fails LOUDLY —
+    the ONE parse/explode pipeline shared by the marks side of
+    ``_dv_anti_join`` (every batch DV read and the DV commit's mark scan),
+    the sharded commit's touched-bucket rewrite, the retraction stream's
+    marks side, and its resume baseline (``streaming/changelog.py``), so no
+    two paths can disagree on path normalization. ``ver_col`` (optional
+    expression) rides along as ``_dv_ver``. An index that does not parse fails LOUDLY —
     silently exploding nothing would drop deletes."""
     carry = ["_dv_ver"] if ver_col is not None else []
     head = [ver_col.alias("_dv_ver")] if ver_col is not None else []

@@ -30,7 +30,7 @@ from incubator_paimon_trino_spark.operators.registry import (
     sql_davg,
     sql_dsum,
 )
-from incubator_paimon_trino_spark.sources import fan_out, table
+from incubator_paimon_trino_spark.sources import table
 
 def _one():
     # F.lit needs an active SparkContext, so this can't be a module constant.

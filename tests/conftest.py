@@ -30,6 +30,12 @@ def spark():
         shuffle_partitions=8,
         extra_conf={"spark.default.parallelism": "2"},
     )
+    # get_spark hands back an already-running session as is, ignoring
+    # extra_conf: fail loudly rather than run the suite under other slicing
+    assert spark.sparkContext.defaultParallelism == 2, (
+        "test session conf ignored: a SparkSession already existed with "
+        f"defaultParallelism={spark.sparkContext.defaultParallelism}"
+    )
     yield spark
 
 

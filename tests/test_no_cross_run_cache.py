@@ -15,6 +15,7 @@ result. Pins:
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 from pathlib import Path
@@ -58,8 +59,11 @@ def test_no_inmemoryrelation_in_benched_plans(spark, name):
 def test_cache_manager_empty_after_benched_runs(spark):
     """Execute the two formerly-cached dedup queries end to end, then assert
     the CacheManager holds nothing: a rebuilt identical plan in a later
-    timed run has nothing to be served from."""
+    timed run has nothing to be served from. The session is shared, so the
+    cache is cleared first: the assertion covers only what these two
+    queries leave behind, not what an earlier test cached."""
     qs = _queries()
+    spark.catalog.clearCache()
     for name in ("dedup_minhash_lsh", "dedup_simhash"):
         qs[name](spark, SF_SMOKE).count()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
@@ -78,8 +82,15 @@ def test_trained_plan_memo_invalidates_on_file_change(spark, tmp_path):
     shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
     first = _trained_cells(spark, str(sf))
     assert _trained_cells(spark, str(sf)) is first  # unchanged file: reuse
-    # rewrite in place (content identical is fine — identity is mtime/size)
+    # rewrite in place (content identical is fine — identity is mtime/size);
+    # bump the mtime explicitly, since a coarse-grained clock can stamp both
+    # copies alike
     shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    st = os.stat(sf / "embeddings.parquet")
+    os.utime(
+        sf / "embeddings.parquet",
+        ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000),
+    )
     assert _trained_cells(spark, str(sf)) is not first, (
         "trained-plan memo served a stale plan after the embeddings file "
         "was regenerated in place"
