@@ -116,14 +116,15 @@ class Snapshot:
     files: list[dict] = field(default_factory=list)
     record_count: int = 0
     manifests: list[str] = field(default_factory=list)
-    #: deletion-vector index file name under ``<table>/index/`` (Paimon's
-    #: ``deletion-vectors.enabled`` — the DV variant of merge-on-read).
-    #: None for tables/snapshots without DVs; absent in older snapshot JSON.
+    #: deletion-vector index manifest name under ``<table>/index/``
+    #: (``dvm-<ver>-<nonce>.json``, listing the per-commit delta mark
+    #: files — ``catalog/dv_index.py``; Paimon's ``deletion-vectors.enabled``,
+    #: the DV variant of merge-on-read). None = no marks: tables without
+    #: DVs, and DV snapshots after a first commit, overwrite or compaction.
     dv: str | None = None
-    #: cumulative live mark count of ``dv`` (lets readers skip the DV
-    #: anti-join for mark-free snapshots in O(1), and the committer pick the
-    #: inline/sharded format without parsing the prior index). None =
-    #: unknown (legacy snapshots) — readers must then assume marks exist.
+    #: cumulative mark count of ``dv`` (sizes the read's broadcast hint and
+    #: the commit's running total without opening the index). Recorded
+    #: only with ``dv``.
     dv_marks: int | None = None
 
     def to_json(self) -> dict:

@@ -842,20 +842,19 @@ class WarehouseCatalog(WriteMixin, MaintenanceMixin, DeletionVectorMixin, SqlMix
             return self.spark.createDataFrame([], empty)
 
         dv_mode = self._dv_enabled(schema) and not with_system_columns
-        # dv_marks == 0 (every DV commit records the cumulative count in
-        # the snapshot) skips the whole anti-join + position columns in
-        # O(1) — most DV-table snapshots carry no marks at all. None =
-        # legacy snapshot without the count: assume marks (old behavior).
-        has_dv = bool(dv_mode and snap.dv and snap.dv_marks != 0)
+        # a snapshot with no index (snap.dv None — every index holds at
+        # least one mark) skips the whole anti-join + position columns in
+        # O(1): most DV-table snapshots carry no marks at all.
+        has_dv = bool(dv_mode and snap.dv)
         df = self._read_files(tdir, schema, snap, with_pos=has_dv)
         if dv_mode:
             # deletion-vector read: scan − DV IS the merged state (every
             # superseded row version is position-marked at write time and
             # -D rows are never stored), so the whole merge-on-read
             # groupBy/shuffle disappears — filters and projections push
-            # straight into the file scan. Every DV read, inline or sharded
-            # index, takes the one path: scan with ``row_index``, then
-            # anti-join the marks Spark reads from the committed index
+            # straight into the file scan. Every DV read takes the one
+            # path: scan with ``row_index``, then anti-join the marks Spark
+            # reads from the committed index's delta files
             # (``_dv_anti_join``, shared with the commit's mark scan).
             # with_system_columns still exposes the raw unfiltered
             # changelog view, like non-DV tables.

@@ -1,5 +1,5 @@
-"""Deletion vectors: commit-time mark building (inline + sharded
-index formats), the distributed mark application, and the
+"""Deletion vectors: commit-time mark building (per-commit delta mark
+files, ``dv_index.py``), the distributed mark application, and the
 delta-vs-base merge split.
 
 Split out of ``warehouse.py`` in r10 — one mixin of
@@ -10,24 +10,28 @@ assembled in ``warehouse.py``.
 from __future__ import annotations
 
 import dataclasses
-import uuid
 import glob
 import os
 import re
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from incubator_paimon_trino_spark.catalog.metadata import (
-    Snapshot,
-    TableSchema,
-    read_json,
-    write_json_atomic,
+from incubator_paimon_trino_spark.catalog.dv_index import (
+    DELTA_SCHEMA,
+    mark_file_names,
+    write_manifest,
 )
+from incubator_paimon_trino_spark.catalog.metadata import Snapshot, TableSchema
 from incubator_paimon_trino_spark.catalog.scan import prune_files
 
 from incubator_paimon_trino_spark.catalog.wh_helpers import *  # noqa: F401,F403
+
+#: Marks per delta part file: a commit's new marks coalesce into
+#: ceil(marks / this) files (one file for any commit short of a bulk delete).
+_MARKS_PER_DELTA_FILE = 1 << 22
 
 
 class DeletionVectorMixin:
@@ -49,50 +53,24 @@ class DeletionVectorMixin:
 
     def _dv_vectors(self, tdir: str, snap: Snapshot | None) -> dict[str, list[int]]:
         """TEST/DEBUG utility: the snapshot's cumulative deletion vectors
-        as a driver dict {rel-or-base path → sorted positions}, either
-        format. NEVER on a read, stream, or commit path (pinned by
-        monkeypatch in tests/test_deletion_vectors.py and
-        tests/test_dv_stream.py) — a sharded index is O(live deleted rows).
-        Missing/absent → {} (nothing deleted)."""
-        from incubator_paimon_trino_spark.catalog.dv_index import (
-            load_index_meta,
-            mark_file_names,
-        )
-
-        meta = load_index_meta(tdir, snap.dv if snap else None)
-        if meta is None:
-            return {}
-        if meta["kind"] == "inline":
-            return meta["vectors"]
+        as a driver dict {data-file basename → sorted positions}. NEVER on
+        a read, stream, or commit path (pinned by monkeypatch in
+        tests/test_deletion_vectors.py and tests/test_dv_stream.py) — it is
+        O(live deleted rows). No index → {} (nothing deleted)."""
+        marks = self._dv_marks_df(tdir, snap.dv if snap else None)
         out: dict[str, list[int]] = {}
-        for name in mark_file_names(tdir, snap.dv):
-            try:
-                doc = read_json(os.path.join(tdir, "index", name))
-            except FileNotFoundError:
-                continue
-            out.update(doc.get("vectors", {}))
-        return out
+        for f, pos in marks.collect() if marks is not None else []:
+            out.setdefault(f, []).append(pos)
+        return {f: sorted(ps) for f, ps in sorted(out.items())}
 
     def _dv_marks_df(self, tdir: str, dv_name: str | None) -> DataFrame | None:
-        """The index's marks as a Spark-read DataFrame (file basename,
-        position) — the ONE way marks reach any read/stream plan. Inline or
-        sharded, the mark-bearing files share the ``{"vectors": ...}``
-        document shape, so both formats flow through the same
-        ``explode_dv_index_text`` pipeline: an inline index parses as one
-        executor task of O(index) (bounded by the inline threshold), a
-        sharded one as many small per-bucket parse tasks. None = no marks
-        (no index, or reaped by expiry)."""
-        from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
-
-        paths = [
-            os.path.join(tdir, "index", n) for n in mark_file_names(tdir, dv_name)
-        ]
-        paths = [p for p in paths if os.path.exists(p)]
+        """The index's marks (file basename, position) as a Spark read of
+        its delta files — the ONE way marks reach a read or commit plan.
+        None = no index."""
+        paths = [os.path.join(tdir, "index", n) for n in mark_file_names(tdir, dv_name)]
         if not paths:
             return None
-        return explode_dv_index_text(
-            self.spark.read.format("text").option("wholetext", "true").load(paths)
-        )
+        return self.spark.read.schema(DELTA_SCHEMA).parquet(*paths)
 
     # ------------------------------------------ broadcast-bound derivation
     # r11 (VERDICT r10 item 4): the delta-split and DV-mark bounds were
@@ -179,15 +157,15 @@ class DeletionVectorMixin:
         columns of ``_read_files(with_pos=True)``; the result keeps them,
         with ``_DV_FILE`` reduced to the basename the index keys on.
 
-        The marks side is read BY SPARK from the committed index, inline or
-        sharded (``_dv_marks_df``), never parsed on the driver. It carries a
+        The marks side is read BY SPARK from the committed index's delta
+        files (``_dv_marks_df``), never parsed on the driver. It carries a
         broadcast hint when the snapshot's recorded cumulative count fits
-        ``autoBroadcastJoinThreshold`` at 64 B a mark: a JSON-parsed side
-        has no stats, and without the hint AQE sort-merge-joined a 23k-mark
-        index against the scan (bench_lake, the join was 2/3 of a 3x read
-        overhead). Above the bound, or with no recorded count, AQE picks
-        the strategy. No marks (``dv_marks == 0``, or the index reaped by
-        expiry) → ``df`` unjoined.
+        ``autoBroadcastJoinThreshold`` at 64 B a mark: measured on the
+        JSON index this format replaced, without the hint AQE
+        sort-merge-joined a 23k-mark index against the scan (bench_lake,
+        the join was 2/3 of a 3x read overhead). Above the bound AQE picks
+        the strategy. No index (``snap.dv`` None — every index holds at
+        least one mark) → ``df`` unjoined.
 
         Kept as the only arm by measurement (local[4], 4 cores / 15 GiB,
         sf0.1 ``lineitem`` of 600k rows, 10 interleaved pairs, plan cache
@@ -205,12 +183,10 @@ class DeletionVectorMixin:
           the 600k-row table, 1.60 → 1.65 s on the 20k-row one (6 commits
           each)."""
         df = df.withColumn(_DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1))
-        if not snap.dv or snap.dv_marks == 0:
+        if not snap.dv:
             return df
         marks = self._dv_marks_df(tdir, snap.dv)
-        if marks is None:
-            return df
-        if snap.dv_marks is not None and snap.dv_marks <= self._broadcast_rows_bound(64, None):
+        if snap.dv_marks <= self._broadcast_rows_bound(64, None):
             marks = F.broadcast(marks)
         return df.join(marks, [_DV_FILE, _DV_POS], "left_anti")
 
@@ -221,7 +197,7 @@ class DeletionVectorMixin:
         prev: Snapshot,
         batch: DataFrame,
         version: int,
-    ) -> tuple[str, int, int, list[str]]:
+    ) -> tuple[str | None, int, int, list[str]]:
         """Find the rows this commit supersedes and publish the commit's DV
         index; returns (index name, newly marked, cumulative marks, files
         this commit wrote — the conflict-cleanup set).
@@ -230,24 +206,12 @@ class DeletionVectorMixin:
         row positions (``_metadata.row_index``), prev's marks drop the
         already-dead rows via the same ``_dv_anti_join`` every read uses,
         and a LEFT SEMI join against the batch's DISTINCT keys finds
-        the superseded positions. What happens to the hits then depends on
-        the CUMULATIVE size (decided from ``prev.dv_marks`` + a distributed
-        count — never a parse):
-
-        - at or under ``dv-index.inline-threshold``: collect (bounded by
-          the threshold) and fold into one inline JSON — the legacy format,
-          O(threshold) driver memory by construction;
-        - above it (or once sharded): executors write per-bucket shard
-          files for ONLY the touched buckets; untouched buckets carry
-          forward by name. No mark set ever reaches the driver — the last
-          O(live deleted rows) driver bound of the DV design is gone.
+        the superseded positions. The hits are strictly new marks, so they
+        ARE this commit's delta: one count job (per marked data file, which
+        the manifest records) and one parquet write, never a driver fold or
+        a rewrite of earlier marks. A commit that marks nothing keeps
+        ``prev.dv``.
         """
-        from incubator_paimon_trino_spark.catalog.dv_index import (
-            inline_threshold,
-            is_sharded,
-            load_index_meta,
-        )
-
         pk = schema.primary_key
         keys = batch.select(*pk).dropDuplicates().persist()
         try:
@@ -285,234 +249,29 @@ class DeletionVectorMixin:
                     _DV_FILE, F.col(_DV_POS).cast("bigint").alias(_DV_POS)
                 )
             else:  # no live file's key range admits any batch key
-                hits = self.spark.createDataFrame(
-                    [], f"{_DV_FILE} string, {_DV_POS} bigint"
-                )
+                hits = self.spark.createDataFrame([], DELTA_SCHEMA)
             hits = hits.persist()
         finally:
             keys.unpersist()
         try:
-            n_hits = hits.count()
-            prev_meta = load_index_meta(tdir, prev.dv)
-            prev_count = prev.dv_marks
-            if prev_count is None:
-                prev_count = (
-                    0
-                    if prev_meta is None
-                    else (
-                        prev_meta["marks"]
-                        if prev_meta["marks"] is not None
-                        # legacy inline without a recorded count: the dict
-                        # is already parsed, size it directly
-                        else sum(len(ps) for ps in prev_meta["vectors"].values())
-                    )
-                )
-            sharded = is_sharded(prev.dv) or (
-                prev_count + n_hits > inline_threshold(schema.options)
-            )
-            if not sharded:
-                return self._dv_fold_inline(tdir, prev, prev_meta, hits, n_hits, version)
-            return self._dv_write_shards(
-                tdir, schema, prev_meta, hits, n_hits, prev_count, version
-            )
+            per_file = hits.groupBy(_DV_FILE).count().collect()
+            prev_marks = prev.dv_marks or 0
+            if not per_file:
+                return prev.dv, 0, prev_marks, []
+            n_hits = sum(r[1] for r in per_file)
+            nonce = uuid.uuid4().hex[:8]
+            idx = os.path.join(tdir, "index")
+            staging = os.path.join(idx, f".staging-dv-{version}-{nonce}")
+            hits.coalesce(-(-n_hits // _MARKS_PER_DELTA_FILE)).write.parquet(staging)
         finally:
             hits.unpersist()
-
-    def _dv_fold_inline(
-        self,
-        tdir: str,
-        prev: Snapshot,
-        prev_meta: dict | None,
-        hits: DataFrame,
-        n_hits: int,
-        version: int,
-    ) -> tuple[str, int, int, list[str]]:
-        """Inline-format commit: cumulative marks ≤ threshold by the
-        caller's decision, so collecting the new hits and folding them into
-        the prior parsed dict is bounded driver work (the docstring
-        contract: the dict survives only here, and only under the
-        threshold). Marks of files no longer live are dropped."""
-        prev_vec = prev_meta["vectors"] if prev_meta else {}
-        base_to_rel = {
-            os.path.basename(f["path"].replace("\\", "/")): f["path"]
-            for f in prev.files
-        }
-        merged: dict[str, set[int]] = {
-            rel: set(ps)
-            for rel, ps in prev_vec.items()
-            if os.path.basename(rel.replace("\\", "/")) in base_to_rel
-        }
-        for r in hits.collect():
-            merged.setdefault(base_to_rel[r[0]], set()).add(int(r[1]))
-        vectors = {rel: sorted(ps) for rel, ps in sorted(merged.items())}
-        total = sum(len(ps) for ps in vectors.values())
-        name = self._dv_write_inline(tdir, version, vectors)
-        return name, n_hits, total, [name]
-
-    def _dv_write_inline(self, tdir: str, version: int, vectors: dict[str, list[int]]) -> str:
-        """Write an inline cumulative DV index for ``version`` BEFORE the
-        snapshot publish (readers must never see the snapshot without its
-        vectors). Nonce-named so racing committers at one version can't
-        cross-wire: each snapshot references exactly the file its own
-        writer produced."""
-        name = f"dv-{version}-{uuid.uuid4().hex[:8]}.json"
-        write_json_atomic(
-            os.path.join(tdir, "index", name),
-            {"vectors": vectors, "marks": sum(len(ps) for ps in vectors.values())},
-        )
-        return name
-
-    def _dv_write_shards(
-        self,
-        tdir: str,
-        schema: TableSchema,
-        prev_meta: dict | None,
-        hits: DataFrame,
-        n_hits: int,
-        prev_count: int,
-        version: int,
-    ) -> tuple[str, int, int, list[str]]:
-        """Sharded-format commit: EXECUTORS write one ``{"vectors": ...}``
-        document per touched bucket (marks hashed by data-file basename);
-        untouched buckets carry their prior shard files forward BY NAME, so
-        consumers diff two snapshots with a metadata-only name compare. The
-        driver handles only bucket ids (≤ ``dv-index.buckets``) and file
-        renames — never marks.
-
-        Rewrite set per bucket = prior marks of that bucket ∪ new hits:
-        prior marks come from reading ONLY the touched buckets' shard files
-        (or the one prior inline file on the threshold-crossing commit).
-        Liveness filtering is deliberately skipped — a dead file's marks
-        anti-join against nothing (harmless) and compaction resets the
-        index wholesale; filtering would force reading every bucket every
-        commit."""
-        from incubator_paimon_trino_spark.catalog.dv_index import index_buckets
-
-        k = index_buckets(schema.options)
-        nonce = uuid.uuid4().hex[:8]
-        bucket = F.pmod(F.crc32(F.encode(F.col(_DV_FILE), "UTF-8")), F.lit(k)).cast("int")
-        carried: dict[int, list[str]] = {}
-        base: DataFrame | None = None
-        if prev_meta is None:
-            touched = None  # no prior marks: every hit bucket gets written
-        elif prev_meta["kind"] == "inline":
-            # threshold-crossing commit: rewrite ALL prior marks into shards
-            touched = None
-            if prev_meta["vectors"]:
-                base = self._dv_marks_df(tdir, prev_meta["name"])
-        elif prev_meta["buckets"] != k:
-            # bucket-count change: full rewrite under the new k (consumers
-            # see every bucket as touched and diff executor-side — correct,
-            # just not incremental for this one commit)
-            touched = None
-            base = self._dv_marks_df(tdir, prev_meta["name"])
-        else:
-            touched = sorted(
-                r[0] for r in hits.select(bucket.alias("_b")).distinct().collect()
-            )
-            carried = {
-                b: names
-                for b, names in prev_meta["shards"].items()
-                if b not in set(touched)
-            }
-            prior_paths = [
-                os.path.join(tdir, "index", n)
-                for b in touched
-                for n in prev_meta["shards"].get(b, [])
-            ]
-            prior_paths = [p for p in prior_paths if os.path.exists(p)]
-            if prior_paths:
-                base = explode_dv_index_text(
-                    self.spark.read.format("text")
-                    .option("wholetext", "true")
-                    .load(prior_paths)
-                )
-        rewrite = hits if base is None else hits.unionByName(base)
-        # Bound each shard DOCUMENT (it aggregates into one JSON string, so
-        # one buffer): buckets whose rewrite exceeds max-marks-per-shard
-        # split into sub-shards by data-file hash — the manifest lists a
-        # LIST of files per bucket and every reader unions marks across
-        # them, so sub-splitting is invisible downstream. Per-file
-        # granularity floor: one data file's marks stay in one document,
-        # bounded by that file's row count. The per-bucket sizing pass is
-        # K rows on the driver.
-        from incubator_paimon_trino_spark.catalog.dv_index import max_marks_per_shard
-
-        max_marks = max_marks_per_shard(schema.options)
-        rewrite = rewrite.withColumn("_b", bucket).persist()
-        try:
-            sizes = {
-                r["_b"]: r["n"]
-                for r in rewrite.groupBy("_b").agg(F.count("*").alias("n")).collect()
-            }
-            subs_of = {b: -(-n // max_marks) for b, n in sizes.items()}
-            over = {b: s for b, s in subs_of.items() if s > 1}
-            if over:
-                # flat map lookup, not a nested WHEN per oversized bucket
-                # (a wide bulk delete could otherwise build a K-deep CASE)
-                sub_count = F.coalesce(
-                    F.element_at(
-                        F.create_map(
-                            *[x for b, s in sorted(over.items()) for x in (F.lit(b), F.lit(s))]
-                        ),
-                        F.col("_b"),
-                    ),
-                    F.lit(1),
-                )
-                sub_expr = F.pmod(
-                    F.crc32(F.encode(F.col(_DV_FILE), "UTF-8")), sub_count
-                )
-            else:
-                sub_expr = F.lit(0)
-            docs = (
-                rewrite.withColumn("_s", sub_expr.cast("int"))
-                .groupBy("_b", "_s", _DV_FILE)
-                .agg(F.sort_array(F.collect_set(_DV_POS)).alias("_ps"))
-                .groupBy("_b", "_s")
-                .agg(
-                    F.to_json(
-                        F.struct(
-                            F.map_from_entries(
-                                F.sort_array(
-                                    F.collect_list(
-                                        F.struct(F.col(_DV_FILE), F.col("_ps"))
-                                    )
-                                )
-                            ).alias("vectors")
-                        )
-                    ).alias("value")
-                )
-            )
-            staging = os.path.join(tdir, "index", f".staging-dv-{version}-{nonce}")
-            docs.write.partitionBy("_b", "_s").text(staging)
-        finally:
-            rewrite.unpersist()
-        written: list[str] = []
-        shards: dict[int, list[str]] = dict(carried)
-        for sdir in sorted(glob.glob(os.path.join(staging, "_b=*", "_s=*"))):
-            b = int(os.path.basename(os.path.dirname(sdir)).split("=", 1)[1])
-            s = int(os.path.basename(sdir).split("=", 1)[1])
-            parts = sorted(glob.glob(os.path.join(sdir, "part-*")))
-            # one row per (bucket, sub) in `docs` → exactly one part file
-            assert len(parts) == 1, f"expected one doc for bucket {b}/{s}: {parts}"
-            name = f"dv-{version}-{nonce}-b{b}-s{s}.json"
-            os.replace(parts[0], os.path.join(tdir, "index", name))
-            written.append(name)
-            if b in carried:
-                raise AssertionError(f"bucket {b} both carried and rewritten")
-            shards.setdefault(b, []).append(name)
+        files = []
+        for i, part in enumerate(sorted(glob.glob(os.path.join(staging, "part-*")))):
+            files.append(f"dv-{version}-{nonce}-{i}.parquet")
+            os.replace(part, os.path.join(idx, files[-1]))
         shutil.rmtree(staging, ignore_errors=True)
-        total = prev_count + n_hits  # hits are strictly new (pre-filtered)
-        manifest = f"dvm-{version}-{nonce}.json"
-        write_json_atomic(
-            os.path.join(tdir, "index", manifest),
-            {
-                "format": "sharded",
-                "buckets": k,
-                "marks": total,
-                "shards": {str(b): names for b, names in sorted(shards.items())},
-            },
+        manifest = write_manifest(
+            tdir, version, nonce, prev.dv,
+            {"files": files, "marked": sorted(r[0] for r in per_file)},
         )
-        written.append(manifest)
-        return manifest, n_hits, total, written
-
+        return manifest, n_hits, prev_marks + n_hits, files + [manifest]

@@ -3,7 +3,7 @@
 Split out of ``warehouse.py`` in r10 (the file passed 6k lines): these are
 the pure functions and constants every ``WarehouseCatalog`` mixin module
 uses — option parsing/validation, sequence/partition-value coercion,
-physical schemas, bucket recording, and the shared DV index explode.
+physical schemas, bucket recording, and the DV provenance columns.
 ``warehouse`` re-exports everything here, so existing
 ``from ...warehouse import X`` call sites keep working.
 """
@@ -75,40 +75,10 @@ _SYSTEM_SUFFIXES = (
 )
 
 #: Deletion-vector provenance columns (never user-visible: appended by
-#: ``_read_files(with_pos=True)`` and consumed by ``_dv_anti_join``).
+#: ``_read_files(with_pos=True)`` and consumed by ``_dv_anti_join``); also
+#: the columns of the index's delta mark files (``dv_index.py``).
 _DV_FILE = "__dv_file"
 _DV_POS = "__dv_pos"
-
-
-def explode_dv_index_text(df: DataFrame, ver_col=None) -> DataFrame:
-    """(file basename, position) marks from wholetext DV index JSON rows —
-    the ONE parse/explode pipeline shared by the marks side of
-    ``_dv_anti_join`` (every batch DV read and the DV commit's mark scan),
-    the sharded commit's touched-bucket rewrite, the retraction stream's
-    marks side, and its resume baseline (``streaming/changelog.py``), so no
-    two paths can disagree on path normalization. ``ver_col`` (optional
-    expression) rides along as ``_dv_ver``. An index that does not parse fails LOUDLY —
-    silently exploding nothing would drop deletes."""
-    carry = ["_dv_ver"] if ver_col is not None else []
-    head = [ver_col.alias("_dv_ver")] if ver_col is not None else []
-    parsed = F.from_json("value", "vectors map<string, array<bigint>>")
-    return (
-        df.select(*head, parsed.alias("_vecs"))
-        .filter(
-            F.assert_true(
-                F.col("_vecs.vectors").isNotNull(),
-                F.concat(F.lit("unreadable DV index: "), F.input_file_name()),
-            ).isNull()
-        )
-        .select(*carry, F.explode("_vecs.vectors").alias("_rel", "_ps"))
-        .select(
-            *carry,
-            F.element_at(
-                F.split(F.regexp_replace("_rel", r"\\", "/"), "/"), -1
-            ).alias(_DV_FILE),
-            F.explode("_ps").alias(_DV_POS),
-        )
-    )
 
 
 def partition_column_expr(pname: str, type_ddl: str) -> Column:
@@ -1084,7 +1054,6 @@ __all__ = [
     "castable_ddl",
     "char_length",
     "collect_file_stats",
-    "explode_dv_index_text",
     "load_snapshots",
     "paimon_to_spark",
     "partition_column_expr",

@@ -410,9 +410,9 @@ class MaintenanceMixin:
                 s for s in self._snapshots(tdir) if s.snapshot_id == seed_id
             )
             if snap.dv:
-                # the seeded snapshot's deletion vectors travel with it —
-                # basename matching makes the ../../ path rewrite moot;
-                # a sharded index copies manifest + shard files
+                # the seeded snapshot's deletion vectors (manifest +
+                # deltas) travel with it — basename matching makes the
+                # ../../ path rewrite moot
                 from incubator_paimon_trino_spark.catalog.dv_index import (
                     copy_index_files,
                 )
@@ -521,11 +521,10 @@ class MaintenanceMixin:
                 os.path.join(tdir, "manifest", mname), {"files": rewritten}
             )
             if s.dv:
-                # grafted snapshots keep their DV index: copy it into main's
-                # namespace (apply matches on basenames, so the stored
-                # branch-relative path keys stay valid as-is); sharded
-                # indexes copy manifest + shards, already-present files
-                # (shards shared across grafted snapshots) copy once
+                # grafted snapshots keep their DV index: copy manifest +
+                # deltas into main's namespace (marks key on basenames, so
+                # branch-relative paths never matter); deltas shared across
+                # grafted snapshots copy once
                 from incubator_paimon_trino_spark.catalog.dv_index import (
                     copy_index_files,
                 )
@@ -1065,21 +1064,17 @@ class MaintenanceMixin:
     def _gc_dv_indexes(tdir: str, kept: list[Snapshot], doomed: list[Snapshot]) -> None:
         """Reap deletion-vector index files owned by expired/rolled-back
         snapshots (nonce-named per commit; a kept snapshot referencing the
-        same name — fast-forward copies keep names, and SHARD files carry
+        same name — fast-forward copies keep names, and delta files carry
         forward across commits by design — pins it). Liveness is resolved
-        to the full file set (manifest + shards), so a shard still listed
+        to the full file set (manifest + deltas), so a delta still listed
         by any kept snapshot's manifest survives its writer's expiry."""
         from incubator_paimon_trino_spark.catalog.dv_index import index_file_names
 
         live: set[str] = set()
-        for s in kept:
-            if s.dv:
-                live.update(index_file_names(tdir, s.dv))
-                live.add(s.dv)
-        for s in doomed:
-            if not s.dv:
-                continue
-            for name in index_file_names(tdir, s.dv) + [s.dv]:
+        for dv in {s.dv for s in kept}:
+            live.update(index_file_names(tdir, dv))
+        for dv in {s.dv for s in doomed}:
+            for name in index_file_names(tdir, dv):
                 if name not in live:
                     try:
                         os.remove(os.path.join(tdir, "index", name))
@@ -1148,7 +1143,9 @@ class MaintenanceMixin:
                 os.remove(p)
         staging_removed = 0
         day_ago = (time.time() - 24 * 3600) * 1000
-        for d in glob.glob(os.path.join(tdir, ".staging-*")):
+        for d in glob.glob(os.path.join(tdir, ".staging-*")) + glob.glob(
+            os.path.join(tdir, "index", ".staging-dv-*")
+        ):
             # In-flight rule for staging dirs: above the snapshot horizon the
             # dir may belong to a LIVE writer (writers finalize at latest+1
             # before publishing), so a caller-supplied aggressive older_than
@@ -1157,7 +1154,7 @@ class MaintenanceMixin:
             # immortality those dirs get a hard 24 h mtime floor (no live
             # writer holds a staging dir for a day — _staging_dir contract).
             # At/below the horizon the caller's cutoff applies as-is.
-            sm = re.match(r"\.staging-c(\d+)-", os.path.basename(d))
+            sm = re.match(r"\.staging-(?:c|dv-)(\d+)-", os.path.basename(d))
             above = sm is None or int(sm.group(1)) > horizon
             eff_cutoff = min(cutoff, day_ago) if above else cutoff
             try:
@@ -1170,19 +1167,18 @@ class MaintenanceMixin:
             except OSError:
                 pass
         # DV index files follow the same lifecycle rules: a writer links its
-        # dv-<version>-<nonce>.json BEFORE publishing, so an unreferenced one
-        # above the horizon may belong to a live commit (kept), while one
-        # at/below the horizon lost its race/crashed and is debris
+        # dv-<version>-<nonce>-<i>.parquet deltas and dvm-<version>-<nonce>
+        # manifest BEFORE publishing, so an unreferenced one above the
+        # horizon may belong to a live commit (kept), while one at/below the
+        # horizon lost its race/crashed and is debris
         from incubator_paimon_trino_spark.catalog.dv_index import index_file_names
 
         live_dv: set[str] = set()
-        for s in snaps:
-            if s.dv:
-                live_dv.update(index_file_names(tdir, s.dv))
-                live_dv.add(s.dv)
+        for dv in {s.dv for s in snaps}:
+            live_dv.update(index_file_names(tdir, dv))
         dv_removed = 0
         for p in sorted(
-            glob.glob(os.path.join(tdir, "index", "dv-*.json"))
+            glob.glob(os.path.join(tdir, "index", "dv-*.parquet"))
             + glob.glob(os.path.join(tdir, "index", "dvm-*.json"))
         ):
             name = os.path.basename(p)

@@ -618,9 +618,9 @@ class WriteMixin:
         elif KIND_COL in out.columns or row_kind not in (None, "I"):
             raise ValueError("row kinds require a primary-key table")
 
-        #: (index name, newly marked, cumulative marks, files written) —
-        #: set for every DV-table commit; None on non-DV tables.
-        dv_index: tuple[str, int, int, list[str]] | None = None
+        #: (index name or None, newly marked, cumulative marks, files
+        #: written) — set for every DV-table commit; None on non-DV tables.
+        dv_index: tuple[str | None, int, int, list[str]] | None = None
         dv_cached: DataFrame | None = None
         if self._dv_enabled(schema):
             pk = schema.primary_key
@@ -653,9 +653,8 @@ class WriteMixin:
                     )
                 if not overwrite and prev is not None and prev.files:
                     dv_index = self._dv_build(tdir, schema, prev, out, version)
-                else:
-                    name = self._dv_write_inline(tdir, version, {})
-                    dv_index = (name, 0, 0, [name])
+                else:  # nothing to mark: a first commit or an overwrite
+                    dv_index = (None, 0, 0, [])
             except BaseException:
                 dv_cached.unpersist()
                 raise
@@ -818,7 +817,7 @@ class WriteMixin:
                 _rm_sidecar(p)
             if dv_index is not None:
                 # remove every index file THIS commit wrote (manifest +
-                # new shards); carried-forward shards belong to the winner
+                # its delta); carried-forward deltas belong to the winner
                 for idx_name in dv_index[3]:
                     try:
                         os.remove(os.path.join(tdir, "index", idx_name))

@@ -1039,14 +1039,7 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("status", "string"),
         ],
         primary_key=["o_orderkey"],
-        options={
-            "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
-            # per-bucket shards, dv_index.py) under the driver's hash gate —
-            # threshold 0 shards from the first mark
-            "dv-index.inline-threshold": "0",
-            "dv-index.buckets": "4",
-        },
+        options={"deletion-vectors.enabled": "true"},
     )
     o = (
         table(spark, sf_dir, "orders")
@@ -1091,8 +1084,8 @@ def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC over a deletion-vectors table — the availableNow twin
     of the resumable retraction stream (r6's one documented DV gap, now
     lifted): deletes on a DV table are pure metadata, so the stream unions
-    the data-file tail's +rows with retractions diffed from the tailed
-    ``index/dv-*.json`` indexes, recovering each marked row's image by
+    the data-file tail's +rows with retractions read from the tailed
+    ``index/dv-*.parquet`` delta files, recovering each marked row's image by
     ``_metadata.row_index`` from ONLY the files the marks reference.
 
     The oracle replays the same edit history as SELECT algebra: +I = every
@@ -1100,8 +1093,8 @@ def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     image plus the delete's live-at-delete-time images.
 
     Scale shape: the +I side is the ordinary file tail (delta files only);
-    the -D side's per-batch work is O(new marks) — the index JSONs are the
-    stream, the static join re-opens only files holding deleted rows, and
+    the -D side's per-batch work is O(new marks) — the index delta files
+    are the stream, the static join re-opens only files holding deleted rows, and
     resume is a consumer-recorded snapshot position (metadata-only). The
     reference stores the changelog-producer DDL options without executing
     them (``common/TrinoTableOptionUtils.java:94-107``).
@@ -1123,14 +1116,7 @@ def lake_dv_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("status", "string"),
         ],
         primary_key=["o_orderkey"],
-        options={
-            "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
-            # per-bucket shards, dv_index.py) under the driver's hash gate —
-            # threshold 0 shards from the first mark
-            "dv-index.inline-threshold": "0",
-            "dv-index.buckets": "4",
-        },
+        options={"deletion-vectors.enabled": "true"},
     )
     o = (
         table(spark, sf_dir, "orders")
@@ -1223,14 +1209,7 @@ def lake_manifest_changelog_stream(spark: SparkSession, sf_dir: str) -> DataFram
             ("status", "string"),
         ],
         primary_key=["o_orderkey"],
-        options={
-            "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
-            # per-bucket shards, dv_index.py) under the driver's hash gate —
-            # threshold 0 shards from the first mark
-            "dv-index.inline-threshold": "0",
-            "dv-index.buckets": "4",
-        },
+        options={"deletion-vectors.enabled": "true"},
     )
     o = (
         table(spark, sf_dir, "orders")
@@ -2131,14 +2110,7 @@ def lake_dv_cdc_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     cat.create_table(
         "lake", "dvt_src", cols, primary_key=["o_orderkey"],
-        options={
-            "deletion-vectors.enabled": "true",
-            # r9: exercise the SHARDED index format (executor-written
-            # per-bucket shards, dv_index.py) under the driver's hash gate —
-            # threshold 0 shards from the first mark
-            "dv-index.inline-threshold": "0",
-            "dv-index.buckets": "4",
-        },
+        options={"deletion-vectors.enabled": "true"},
     )
     cat.create_table("lake", "mirror", cols, primary_key=["o_orderkey"])
     o = (

@@ -62,6 +62,22 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    from pyspark import SparkContext
+
+    already_running = SparkContext._active_spark_context is not None
     spark = builder.getOrCreate()
+    if already_running:
+        # getOrCreate() hands back the running session: it applies the
+        # runtime-modifiable SQL confs and silently drops the rest (core
+        # and static confs, fixed when the context started). Fail loudly
+        # instead of running under a conf the caller did not get.
+        sc_conf = spark.sparkContext.getConf()
+        for k, v in (extra_conf or {}).items():
+            running = spark.conf.get(k, None) if spark.conf.isModifiable(k) else sc_conf.get(k)
+            if running != v:
+                raise RuntimeError(
+                    f"get_spark: extra_conf {k}={v!r} ignored — a SparkSession "
+                    f"already runs with {k}={running!r}; stop it first"
+                )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -31,7 +31,6 @@ from incubator_paimon_trino_spark.catalog.warehouse import (
     _DV_POS,
     WarehouseCatalog,
     _physical_schema,
-    explode_dv_index_text,
     partition_column_expr,
 )
 
@@ -55,8 +54,8 @@ def read_changelog_stream(
 
     PK tables yield changelog rows (``_seq``/``_row_kind`` included);
     append-only tables yield plain rows. Deletion-vectors tables yield the
-    file tail's +rows UNIONED with a ``-D`` retraction stream diffed from
-    the tailed DV indexes (``_dv_retraction_stream`` below) — a CDC consumer
+    file tail's +rows UNIONED with a ``-D`` retraction stream read from
+    the tailed DV delta files (``_dv_retraction_stream`` below) — a CDC consumer
     of a DV table gets a resumable stream with its deletes, not a silent
     insert-only view. New commits are picked up as their
     files land — at scale, set ``max_files_per_trigger`` to bound batch size
@@ -181,7 +180,7 @@ def read_changelog_stream(
     if cat._dv_enabled(schema):
         # a DV table's deletes are pure metadata (no -D data rows), so the
         # file tail alone would silently drop every delete — union it with
-        # the retraction stream diffed from the tailed DV indexes. The -D
+        # the retraction stream read from the tailed DV delta files. The -D
         # side carries ``_dv_ver`` (the DELETE's commit id): a retraction's
         # ``_seq`` is the OLD image's by design, so consumer checkpoints
         # must advance by max(_seq, _dv_ver) — a retraction-only batch
@@ -314,42 +313,27 @@ def _dv_retraction_stream(
 ) -> DataFrame:
     """-D retractions for a deletion-vectors table, as a resumable stream.
 
-    A DV table's deletes never write data rows — each commit publishes a
-    CUMULATIVE ``index/dv-<version>-*.json`` marking every superseded (file,
-    position) pair. Those index files are immutable and land atomically,
-    so they are themselves tailable: this stream
+    A DV table's deletes never write data rows — each marking commit
+    writes ``index/dv-<version>-<nonce>-<i>.parquet`` delta files holding
+    exactly ITS new (file basename, position) marks (``dv_index.py``).
+    Those files are immutable and land atomically, so they are themselves
+    tailable: this stream
 
-    1. tails ``index/dv-*.json`` (wholetext; the commit version parsed from
-       the file name),
-    2. explodes each index into (file basename, position) marks and drops
-       the RESUME BASELINE — marks already cumulative at ``from_version - 1``
-       (a distributed anti-join against a Spark read of the prior snapshot's
-       committed index, through the same parse/explode pipeline as the
-       marks side — exactly the set a resuming consumer has already
-       retracted, and never materialized on the driver: at 100 TB the
-       baseline is O(live deleted rows)),
+    1. tails ``index/dv-*.parquet`` (the commit version parsed from the
+       file name, riding along as ``_dv_ver``),
+    2. resumes with a plain ``_dv_ver >= from_version`` filter — a delta
+       holds one commit's retractions, so everything below the consumer's
+       position was retracted before it and nothing above was,
     3. recovers each marked row's full image with a stream-static join
        against a batch read of ONLY the DV-referenced data files (positions
        via ``_metadata.row_index`` — the plan-quality property: a delete of
-       k rows re-opens the files holding those rows, never the table), and
-    4. emits each (file, position) exactly once via streaming
-       ``dropDuplicates`` — consecutive cumulative indexes repeat old marks;
-       first-seen wins. State is O(live marks), the size of the DV metadata
-       itself, reset by compaction like the vectors.
+       k rows re-opens the files holding those rows, never the table).
 
-    Attribution: retractions carry the OLD row's ``_seq``; ``_row_kind`` is
-    ``'D'``; ``_dv_ver`` is the version of A COMMITTED INDEX CONTAINING the
-    mark — indexes are cumulative and the arbitrary dropDuplicates survivor
-    decides which copy's version rides along, so within one availableNow
-    batch it is an upper bound on the retracting commit, not an exact
-    attribution (exact under per-commit triggers, where first-seen state
-    keeps the earliest index; exact ALWAYS in ``source_mode="manifest"``,
-    whose marks are per-commit diffs). Any bound is checkpoint-safe: a
-    surviving copy's index version was consumed by this batch, so
-    ``max(_dv_ver)`` never advances past unconsumed commits. With
-    per-commit triggers marks surface in commit order; one availableNow
-    batch surfaces them all at once (cumulative indexes make that
-    value-identical, order aside).
+    No mark appears in two delta files (a commit's mark scan anti-joins
+    the earlier marks), so there is no dedup state, and ``_dv_ver`` is the
+    retracting commit exactly — the column checkpoint advancement reads.
+    With per-commit triggers marks surface in commit order; one
+    availableNow batch surfaces them all at once.
 
     KNOWN LIMIT (same static-listing shape as the write-race note above):
     the static side lists the DV-referenced files at STREAM BUILD time, so a
@@ -361,63 +345,39 @@ def _dv_retraction_stream(
     """
     import dataclasses
 
+    from incubator_paimon_trino_spark.catalog.dv_index import DELTA_SCHEMA, mark_file_names
+
     index_dir = os.path.join(tdir, "index")
     os.makedirs(index_dir, exist_ok=True)  # tailable even before any delete
 
     reader = (
-        cat.spark.readStream.format("text")
-        .schema("value string")
-        .option("wholetext", "true")
-        .option("pathGlobFilter", "dv-*.json")
+        cat.spark.readStream.schema(DELTA_SCHEMA)
+        .option("pathGlobFilter", "dv-*.parquet")
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    idx = reader.load(index_dir)
+    idx = reader.parquet(index_dir)
     snaps = cat._snapshots(tdir)
     ver = F.regexp_extract(F.input_file_name(), r"/dv-(\d+)-[^/]*$", 1).cast("bigint")
-    # Only COMMITTED indexes may retract: a crashed/racing writer leaves an
-    # orphan dv-*.json that no snapshot references (vacuum keeps it while
+    # Only COMMITTED deltas may retract: a crashed/racing writer leaves an
+    # orphan dv-*.parquet that no snapshot references (vacuum keeps it while
     # above the horizon), and tailing it would emit phantom -D rows for
-    # deletes that never happened. Indexes at versions known at build time
-    # must match the exact file name their snapshot references; versions
-    # beyond the build-time tip are accepted on faith — the same
+    # deletes that never happened. Deltas at versions known at build time
+    # must be listed by a snapshot's manifest; versions beyond the
+    # build-time tip are accepted on faith — the same
     # files-land-before-publish trust window as the data-file tail (KNOWN
     # LIMIT above), closed by the periodic-restart discipline.
-    # mark-bearing file names only: an inline index is itself; a sharded
-    # index contributes its per-bucket shard files (same document shape —
-    # the dv-*.json glob tails them directly; the dvm- manifest carries no
-    # marks and is glob-invisible). Shard files carried forward across
-    # commits resolve once (set semantics).
-    from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
-
-    committed = sorted(
-        {n for s in snaps if s.dv for n in mark_file_names(tdir, s.dv)}
-    )
+    dvs = {s.dv for s in snaps if s.dv}
+    committed = sorted({n for dv in dvs for n in mark_file_names(tdir, dv)})
     build_tip = snaps[-1].snapshot_id if snaps else 0
     idx_name = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    marks = _explode_dv_index(
-        idx.filter((ver > F.lit(build_tip)) | idx_name.isin(committed)),
-        ver_col=ver,
+    marks = idx.filter((ver > F.lit(build_tip)) | idx_name.isin(committed)).withColumn(
+        "_dv_ver", ver
     )
     if from_version is not None:
         marks = marks.filter(F.col("_dv_ver") >= F.lit(from_version))
-        prior = [s for s in snaps if s.snapshot_id < from_version]
-        if prior and prior[-1].dv:
-            # the resume baseline: cumulative vectors at from_version - 1 —
-            # everything below was retracted before the consumer's position.
-            # Read DISTRIBUTED through the same parse/explode pipeline as
-            # the marks side and anti-joined executor-side: the baseline is
-            # O(live deleted rows) and must never transit the driver (a
-            # long-lived consumer of a 100 TB table can hold billions of
-            # marks). _dv_marks_df resolves either format (a sharded
-            # baseline reads as per-bucket parse tasks). A baseline index
-            # reaped by expiry (position past the horizon) means nothing
-            # below survives to replay — skip.
-            base_df = cat._dv_marks_df(tdir, prior[-1].dv)
-            if base_df is not None:
-                marks = marks.join(base_df, [_DV_FILE, _DV_POS], "left_anti")
 
-    entries = _dv_referenced_entries(cat, tdir, snaps)
+    entries = _dv_referenced_entries(tdir, snaps)
     if not entries:
         empty = cat.spark.createDataFrame([], schema.spark_schema())
         old_df = empty.select(
@@ -432,56 +392,32 @@ def _dv_retraction_stream(
         old_df = cat._read_files(tdir, schema, snap, with_pos=True).withColumn(
             _DV_FILE, F.element_at(F.split(F.col(_DV_FILE), "/"), -1)
         )
-    return (
-        marks.join(old_df, [_DV_FILE, _DV_POS])  # stream-static: recover images
-        .dropDuplicates([_DV_FILE, _DV_POS])  # cumulative indexes repeat marks
-        .select(
-            *[F.col(f.name) for f in schema.fields],
-            F.col(SEQ_COL),
-            F.lit("D").alias(KIND_COL),
-            # the retracting commit's id — ``_seq`` above is the OLD image's
-            # (attribution), so checkpoint advancement reads THIS column
-            F.col("_dv_ver"),
-        )
+    return marks.join(old_df, [_DV_FILE, _DV_POS]).select(  # stream-static: recover images
+        *[F.col(f.name) for f in schema.fields],
+        F.col(SEQ_COL),
+        F.lit("D").alias(KIND_COL),
+        # the retracting commit's id — ``_seq`` above is the OLD image's
+        # (attribution), so checkpoint advancement reads THIS column
+        F.col("_dv_ver"),
     )
 
 
-# moved to warehouse.explode_dv_index_text (r8: the batch DV read shares it)
-_explode_dv_index = explode_dv_index_text
-
-
-def _dv_referenced_entries(cat: WarehouseCatalog, tdir: str, snaps: list) -> dict[str, dict]:
+def _dv_referenced_entries(tdir: str, snaps: list) -> dict[str, dict]:
     """Manifest entries (by file basename) for ONLY the data files any
-    COMMITTED DV index references — the -D static side's read set. The
-    referenced-file set is collected by ONE Spark job over every committed
-    mark file (inline docs and shards alike): distinct basenames only, so
-    the driver holds O(marked files), never O(marks) — a sharded index of
-    10⁹ marks still resolves to the handful of files holding them. Marks
-    are bounded by deletions since the last compaction, so a k-row delete
-    stream re-opens the files holding those k rows, never the table (the
-    plan-quality property ``tests/test_dv_stream.py`` pins). Orphan
-    dv-*.json from crashed/racing writers are ignored (their marks never
-    committed — the stream filters them too); an unreadable COMMITTED index
-    raises, like the batch reader. A referenced file whose manifest entry
-    has been expired away is skipped: its marks belong to history a resume
-    position past expiry never replays."""
-    from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
+    COMMITTED DV index marks — the -D static side's read set, from the
+    marked-file lists the index manifests record (metadata only, no job).
+    Marks are bounded by deletions since the last compaction, so a k-row
+    delete stream re-opens the files holding those k rows, never the table
+    (the plan-quality property ``tests/test_dv_stream.py`` pins). Orphan
+    deltas from crashed/racing writers are listed by no manifest, so they
+    are ignored here as in the stream. A referenced file whose manifest
+    entry has been expired away is skipped: its marks belong to history a
+    resume position past expiry never replays."""
+    from incubator_paimon_trino_spark.catalog.dv_index import marked_data_files
 
-    paths = sorted(
-        {
-            os.path.join(tdir, "index", n)
-            for s in snaps
-            if s.dv
-            for n in mark_file_names(tdir, s.dv)
-        }
-    )
-    paths = [p for p in paths if os.path.exists(p)]
     referenced: set[str] = set()
-    if paths:
-        marks = _explode_dv_index(
-            cat.spark.read.format("text").option("wholetext", "true").load(paths)
-        )
-        referenced = {r[0] for r in marks.select(_DV_FILE).distinct().collect()}
+    for dv in {s.dv for s in snaps if s.dv}:
+        referenced |= marked_data_files(tdir, dv)
     entries: dict[str, dict] = {}
     for s in snaps:
         for f in s.files:
@@ -657,6 +593,13 @@ def run_to_completion(
     nothing is tuned to local mode. State semantics are partition-count
     independent (hash partitioning on the same keys either way); the conf
     is restored after the run, so batch queries in the session never see it.
+
+    NOT re-entrant: the clamp sets the SESSION-GLOBAL
+    ``spark.sql.shuffle.partitions`` for the whole length of the run, so a
+    query planned concurrently in the same session (another thread, or a
+    nested ``run_to_completion``) inherits the clamped count, and
+    interleaved set/restore pairs can leave the wrong value behind. Run
+    clamped streams one at a time per session.
     """
     spark = stream_df.sparkSession
     prev: str | None = None

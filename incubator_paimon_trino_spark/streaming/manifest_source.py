@@ -22,18 +22,17 @@ executes them on Spark's public Python DataSource API
   snapshot publish is the visibility point, so a racing loser's files are
   never planned; COMPACT commits plan no file additions (rewrites are not
   writer input — Paimon's changelog contract), so compaction never
-  re-emits; DV marks are per-commit index diffs, so each mark is emitted
-  exactly once with NO streaming dedup state at all.
+  re-emits; a DV commit's marks are its own delta file (``dv_index.py``),
+  so each mark is emitted exactly once with NO streaming dedup state.
 - Rows are produced as Arrow record batches; columns are mapped by FIELD
   ID per file schema (renames never orphan pre-rename files — the batch
   reader's A18 contract, which the name-matching file tail must refuse).
 
 Driver-side planning is metadata-only: snapshot JSONs, one schema JSON per
-distinct file schema, and — for DV commits — the two cumulative index JSONs
-whose diff is that commit's marks (transient parse, same cost every batch
-DV read already pays; the stream retains NO cumulative state between
-triggers). Production swap at 100 TB: per-bucket bitmap DV index files
-diffed executor-side, as Paimon stores them.
+distinct file schema, and — for DV commits — the commit's index manifest
+and its predecessor's, whose difference names the commit's new delta
+files and the data files they mark (the stream retains NO cumulative
+state between triggers). Executors read the delta's marks themselves.
 
 Scale shape: executors read only the planned delta files (Arrow parquet,
 one file per task); a k-row DELETE plans partitions for exactly the files
@@ -427,16 +426,9 @@ class _ManifestStreamReader(DataSourceStreamReader):
                         "out_cols": out_cols,
                     }))
             if self.dv and s.dv != prev_dv:
-                # this commit's marks = cumulative(v) − cumulative(prev
-                # committed): exact per-commit retractions, no dedup state.
-                # A compaction RESET (marks vanish with their rewritten
-                # files) diffs to nothing, correctly. Two format regimes:
-                # inline indexes (bounded by the table's inline threshold)
-                # diff HERE, on the planner; a SHARDED index diffs by
-                # comparing per-bucket shard file NAMES — metadata-only —
-                # and ships only the changed buckets' document paths to
-                # executors, which do the O(bucket marks) parse+diff. The
-                # planner never reads a shard file.
+                # this commit's marks = the deltas its manifest lists and
+                # the prior one does not: exact per-commit retractions, no
+                # dedup state. A compaction RESET (no index) plans nothing.
                 parts.extend(
                     self._plan_dv_partitions(s, prev_dv, current, is_pk, out_cols)
                 )
@@ -444,147 +436,66 @@ class _ManifestStreamReader(DataSourceStreamReader):
         return parts
 
     def _plan_dv_partitions(self, s, prev_dv, current, is_pk, out_cols):
-        from incubator_paimon_trino_spark.catalog.dv_index import load_index_meta
+        """Partitions retracting the marks of ``s``'s new deltas: the
+        data files each delta marks, packed like data files, every pack
+        reading the delta's part files for its own files' positions."""
+        from incubator_paimon_trino_spark.catalog.dv_index import load_manifest
 
-        sid = s.snapshot_id
-        cur_meta = load_index_meta(self.tdir, s.dv)
-        if cur_meta is None:
-            return []  # no index / reaped: nothing can be fresh
-        if cur_meta["kind"] == "inline" and not cur_meta["vectors"]:
-            return []  # empty inline (covers legacy docs without "marks")
-        if cur_meta["kind"] == "sharded" and not cur_meta["marks"]:
-            return []
-        prev_meta = load_index_meta(self.tdir, prev_dv)
+        seen = {tuple(d["files"]) for d in load_manifest(self.tdir, prev_dv)}
         entries = {
             os.path.basename(f["path"].replace("\\", "/")): f for f in s.files
         }
+        idx = os.path.join(self.tdir, "index")
         parts: list[InputPartition] = []
-        if cur_meta["kind"] == "inline":
-            if prev_meta is not None and prev_meta["kind"] == "sharded":
-                # unreachable via this warehouse's writer (once sharded, an
-                # index stays sharded until a compaction RESET, which
-                # clears s.dv marks to zero) — a foreign/corrupt history
-                raise ValueError(
-                    f"DV index of snapshot {sid} is inline but its "
-                    "predecessor is sharded — unsupported history"
-                )
-            base_marks = {
-                os.path.basename(rel.replace("\\", "/")): set(ps)
-                for rel, ps in (prev_meta["vectors"] if prev_meta else {}).items()
-            }
-            marked: list[dict] = []
-            for rel, positions in sorted(cur_meta["vectors"].items()):
-                fbase = os.path.basename(rel.replace("\\", "/"))
-                fresh = sorted(set(positions) - base_marks.get(fbase, set()))
-                if not fresh:
-                    continue
+        for delta in load_manifest(self.tdir, s.dv):
+            if tuple(delta["files"]) in seen:
+                continue  # carried forward: retracted by an earlier commit
+            marked = []
+            for fbase in delta["marked"]:
                 e = entries.get(fbase)
                 if e is None:
-                    # a mark against a file this snapshot does not list
-                    # is a corrupt index — failing loudly beats silently
+                    # a mark against a file this snapshot does not list is a
+                    # corrupt index — failing loudly beats silently
                     # dropping a delete
                     raise ValueError(
-                        f"DV index of snapshot {sid} marks unknown file {fbase}"
+                        f"DV index of snapshot {s.snapshot_id} marks unknown file {fbase}"
                     )
-                marked.append({**e, "_fresh": fresh})
-            # marked files pack like data files (a delete across many
-            # small files would otherwise cost one Python task each)
+                marked.append(e)
             for (fsid, fmt), pack in _pack_splits(marked, self.split_bytes):
                 renames, missing = self._column_spec(fsid, current)
                 parts.append(InputPartition({
                     "kind": "dv",
+                    "marks": [os.path.join(idx, n) for n in delta["files"]],
                     "files": [
                         {
                             "path": os.path.normpath(
                                 os.path.join(self.tdir, e["path"])
                             ),
                             "parts": self._partition_spec(e, current),
-                            "positions": e["_fresh"],
                         }
                         for e in pack
                     ],
                     "fmt": fmt,
-                    "commit": sid,
+                    "commit": s.snapshot_id,
                     "pk": is_pk,
                     "renames": renames,
                     "missing": missing,
                     "out_cols": out_cols,
                 }))
-            return parts
-
-        # sharded: one partition per CHANGED bucket (same shard names =
-        # provably no new marks — shard files are immutable and carried
-        # forward by name)
-        from incubator_paimon_trino_spark.catalog.dv_index import bucket_of
-
-        k = cur_meta["buckets"]
-        idx = os.path.join(self.tdir, "index")
-        if prev_meta is None:
-            prev_for = lambda b: []  # noqa: E731
-        elif prev_meta["kind"] == "inline":
-            prev_paths = [os.path.join(idx, prev_meta["name"])]
-            prev_for = lambda b: prev_paths  # noqa: E731
-        elif prev_meta["buckets"] != k:
-            all_prev = [
-                os.path.join(idx, n)
-                for names in prev_meta["shards"].values()
-                for n in names
-            ]
-            prev_for = lambda b: all_prev  # noqa: E731
-        else:
-            prev_for = lambda b: [  # noqa: E731
-                os.path.join(idx, n) for n in prev_meta["shards"].get(b, [])
-            ]
-        by_bucket: dict[int, dict] = {}
-        for fbase, e in entries.items():
-            by_bucket.setdefault(bucket_of(fbase, k), {})[fbase] = e
-        for b, names in sorted(cur_meta["shards"].items()):
-            if (
-                prev_meta is not None
-                and prev_meta["kind"] == "sharded"
-                and prev_meta["buckets"] == k
-                and prev_meta["shards"].get(b) == names
-            ):
-                continue  # untouched bucket
-            bucket_entries = by_bucket.get(b, {})
-            sids = {e["schema_id"] for e in bucket_entries.values()}
-            parts.append(InputPartition({
-                "kind": "dv_shard",
-                "commit": sid,
-                "bucket": b,
-                "buckets": k,
-                "cur_marks": [os.path.join(idx, n) for n in names],
-                "prev_marks": prev_for(b),
-                "files": {
-                    fbase: {
-                        "path": os.path.normpath(
-                            os.path.join(self.tdir, e["path"])
-                        ),
-                        "parts": self._partition_spec(e, current),
-                        "sid": e["schema_id"],
-                        "fmt": e.get("format", "parquet"),
-                    }
-                    for fbase, e in bucket_entries.items()
-                },
-                "col_specs": {
-                    str(fsid): self._column_spec(fsid, current) for fsid in sids
-                },
-                "pk": is_pk,
-                "out_cols": out_cols,
-            }))
         return parts
 
     # ---- executor read
     def read(self, partition: InputPartition) -> Iterator:
         spec = partition.value
-        if spec["kind"] == "dv_shard":
-            yield from self._read_dv_shard(spec)
-            return
         renames, missing = spec["renames"], spec["missing"]
+        if spec["kind"] == "dv":
+            positions = _read_marks(
+                spec["marks"], [os.path.basename(f["path"]) for f in spec["files"]]
+            )
         for f in spec["files"]:
             table = _read_file(f["path"], spec["fmt"], renames, spec["pk"])
             if spec["kind"] == "dv":
-                table = table.take(f["positions"])
+                table = table.take(positions[os.path.basename(f["path"])])
             yield from _output_batches(
                 table,
                 spec["out_cols"],
@@ -594,43 +505,22 @@ class _ManifestStreamReader(DataSourceStreamReader):
                 dv_commit=spec["commit"] if spec["kind"] == "dv" else None,
             )
 
-    def _read_dv_shard(self, spec: dict) -> Iterator:
-        """One changed bucket of a SHARDED index commit: parse the bucket's
-        current and prior mark documents (per-bucket JSON shards, or the
-        one prior inline file on the threshold-crossing commit), diff to
-        this commit's fresh marks, and emit -D rows by positional take on
-        the marked data files. All O(bucket marks) work happens HERE, in
-        the executor — the planner only compared shard file names. The
-        task granularity is the BUCKET (a diff needs a bucket's whole
-        current and prior mark sets), so ``dv-index.buckets`` is the knob
-        bounding per-task memory on huge-delete tables — the same knob
-        that sizes the commit's write parallelism. (The batch read has no
-        such floor: its anti-join explodes shard documents as ordinary
-        distributed rows.)"""
-        cur = _parse_bucket_marks(spec["cur_marks"], spec["bucket"], spec["buckets"])
-        prev = _parse_bucket_marks(spec["prev_marks"], spec["bucket"], spec["buckets"])
-        for base in sorted(cur):
-            fresh = sorted(cur[base] - prev.get(base, set()))
-            if not fresh:
-                continue
-            e = spec["files"].get(base)
-            if e is None:
-                # a mark against a file this snapshot does not list is a
-                # corrupt index — failing loudly beats dropping a delete
-                raise ValueError(
-                    f"DV index of snapshot {spec['commit']} marks unknown "
-                    f"file {base}"
-                )
-            renames, missing = spec["col_specs"][str(e["sid"])]
-            table = _read_file(e["path"], e["fmt"], renames, spec["pk"])
-            yield from _output_batches(
-                table.take(fresh),
-                spec["out_cols"],
-                renames,
-                missing,
-                e["parts"],
-                dv_commit=spec["commit"],
-            )
+
+def _read_marks(paths: list[str], bases: list[str]) -> dict[str, list[int]]:
+    """{data-file basename: sorted positions} of one delta's marks on
+    ``bases``, read in the executor from the delta's part files. A part
+    file reaped between planning and read raises (Spark retries the
+    task): losing it mid-batch would drop deletes."""
+    import pyarrow.parquet as pq
+
+    from incubator_paimon_trino_spark.catalog.wh_helpers import _DV_FILE, _DV_POS
+
+    out: dict[str, list[int]] = {b: [] for b in bases}
+    for p in paths:
+        t = pq.read_table(p, columns=[_DV_FILE, _DV_POS], filters=[(_DV_FILE, "in", bases)])
+        for fb, pos in zip(t.column(_DV_FILE).to_pylist(), t.column(_DV_POS).to_pylist()):
+            out[fb].append(pos)
+    return {b: sorted(ps) for b, ps in out.items()}
 
 
 def _read_file(path: str, fmt: str, renames: list, pk: bool):
@@ -668,7 +558,7 @@ def _output_batches(table, out_cols, renames, missing_cols, parts, dv_commit):
     renamed columns cast by field id, partition values injected from the
     path, absent-in-file columns as nulls; DV retractions override
     ``_row_kind`` to 'D' and ride the retracting commit id in ``_dv_ver``.
-    Shared by the data/dv partition reads and the sharded-DV read."""
+    Shared by the data and dv partition reads."""
     import pyarrow as pa
 
     n = len(table)
@@ -702,32 +592,6 @@ def _output_batches(table, out_cols, renames, missing_cols, parts, dv_commit):
         arrays.append(arr)
         names.append(name)
     yield from pa.table(dict(zip(names, arrays))).to_batches()
-
-
-def _parse_bucket_marks(paths: list[str], bucket: int, k: int) -> dict[str, set[int]]:
-    """{data-file basename: positions} for ONE bucket, parsed from mark
-    documents (per-bucket shard files, or an inline index filtered down to
-    the bucket on threshold-crossing/bucket-count-change commits). Runs in
-    the executor; an unreadable document raises — silently dropping a
-    delete is the worst failure mode. A document reaped by expiry between
-    planning and read raises too (the plan referenced it; losing it
-    mid-batch is a real race to surface, and Spark retries the task)."""
-    import json as _json
-
-    from incubator_paimon_trino_spark.catalog.dv_index import bucket_of
-
-    out: dict[str, set[int]] = {}
-    for p in paths:
-        with open(p) as fh:
-            doc = _json.load(fh)
-        vecs = doc.get("vectors")
-        if vecs is None:
-            raise ValueError(f"unreadable DV index document: {p}")
-        for rel, ps in vecs.items():
-            base = os.path.basename(rel.replace("\\", "/"))
-            if bucket_of(base, k) == bucket:
-                out.setdefault(base, set()).update(int(x) for x in ps)
-    return out
 
 
 def _pack_splits(entries: list[dict], target_bytes: int):

@@ -125,10 +125,11 @@ def test_dv_compact_resets_vectors_and_expire_reaps_indexes(cat, spark):
     # compacted snapshot carries no vectors (live set was rewritten clean)
     assert cat._latest_snapshot(cat._table_dir("d", "t")).dv is None
     idx = os.path.join(cat._table_dir("d", "t"), "index")
-    n_idx_before = len(glob.glob(os.path.join(idx, "dv-*.json")))
+    n_idx_before = len(glob.glob(os.path.join(idx, "dv-*.parquet")))
+    assert n_idx_before == 2  # one delta per marking commit (upsert, delete)
     cat.expire_snapshots("d", "t", keep_last=1)
     # expired snapshots' DV index files are reaped with them
-    assert len(glob.glob(os.path.join(idx, "dv-*.json"))) < n_idx_before
+    assert len(glob.glob(os.path.join(idx, "dv-*.parquet"))) < n_idx_before
     assert sorted((r.k, r.v) for r in cat.read_table("d.t").collect()) == before
 
 
@@ -180,11 +181,11 @@ def test_remove_orphan_files_reaps_lost_dv_indexes(cat, spark):
     cat.insert_into("d", "t", mk([(1, "a")]))
     cat.insert_into("d", "t", mk([(1, "A")]))  # snapshot 2 with a live DV
     idx = os.path.join(cat._table_dir("d", "t"), "index")
-    orphan = os.path.join(idx, "dv-2-deadbeef.json")  # loser at horizon
-    inflight = os.path.join(idx, "dv-3-cafebabe.json")  # above horizon
+    orphan = os.path.join(idx, "dv-2-deadbeef-0.parquet")  # loser at horizon
+    inflight = os.path.join(idx, "dv-3-cafebabe-0.parquet")  # above horizon
     for p in (orphan, inflight):
-        with open(p, "w") as fh:
-            fh.write('{"vectors": {}}')
+        with open(p, "wb") as fh:
+            fh.write(b"PAR1")
     old = 0
     os.utime(orphan, (old, old))
     os.utime(inflight, (old, old))
@@ -194,6 +195,10 @@ def test_remove_orphan_files_reaps_lost_dv_indexes(cat, spark):
     assert os.path.exists(inflight)  # horizon guard: may be a live writer
     live = cat._latest_snapshot(cat._table_dir("d", "t")).dv
     assert os.path.exists(os.path.join(idx, live))
+    from incubator_paimon_trino_spark.catalog.dv_index import mark_file_names
+
+    deltas = mark_file_names(cat._table_dir("d", "t"), live)
+    assert deltas and all(os.path.exists(os.path.join(idx, n)) for n in deltas)
     assert [(r.k, r.v) for r in cat.read_table("d.t").collect()] == [(1, "A")]
 
 

@@ -1,40 +1,37 @@
-"""Sharded deletion-vector indexes (``catalog/dv_index.py``).
+"""Deletion-vector delta index (``catalog/dv_index.py``).
 
-Above the table's ``dv-index.inline-threshold`` (or from the first mark,
-with the threshold forced to 0) the commit writes EXECUTOR-SIDE per-bucket
-shard files and a tiny ``dvm-`` manifest listing them — the driver never
-holds the mark set (the last O(live deleted rows) driver bound of the DV
-design, r8 verdict item 1). These tests pin:
+Every marking commit writes ONLY its new marks as parquet delta files and a
+tiny ``dvm-`` manifest listing every delta since the last reset, carried
+forward by name. These tests pin:
 
-- batch read + time travel over sharded histories,
-- the inline→sharded threshold crossing mid-history,
-- carry-forward: a commit rewrites only the buckets its marks touch,
-- both streaming modes (file tail and manifest source) over sharded
-  histories, including consumer resume against a sharded baseline,
-- expiry GC / orphan vacuum / branch copies resolve manifest+shards,
-- THE PIN: above the threshold, a DELETE's commit plans no driver-side
-  mark materialization (the inline fold is provably not on the path), and
-  under it the sharded writer is provably not on the path,
-- compaction resets the sharded index like the inline one,
-- the mark-free read gate: a snapshot with dv_marks == 0 plans no DV
-  anti-join at all (r8 ADVICE item).
+- batch read + time travel over delta histories, with ``dv_marks``,
+- a commit writes only its own marks; earlier deltas carry forward,
+- both streaming modes (file tail and manifest source) over delta
+  histories, including consumer resume,
+- expiry GC / orphan vacuum / branch copies resolve manifest + deltas,
+- no commit or read materializes the mark set on the driver,
+- compaction resets the index,
+- the mark-free read gate: a snapshot without an index plans no DV
+  anti-join at all (r8 ADVICE item),
+- the commit's mark scan is pruned by the batch's key range,
+- a randomized model of inserts, upserts, deletes and compactions.
 
-Reference anchor: Paimon's per-bucket DV index layout, inherited by the
-reference's scan layer (``common/TrinoPageSourceProvider.java:85-94``).
+(The file name predates the delta format: it pinned the sharded index the
+delta files replaced.)
+
+Reference anchor: Paimon's DV index files, inherited by the reference's
+scan layer (``common/TrinoPageSourceProvider.java:85-94``).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401
+import pyarrow.parquet as pq
 
 from incubator_paimon_trino_spark.catalog.dv_index import (
-    bucket_of,
-    is_sharded,
-    load_index_meta,
+    load_manifest,
     mark_file_names,
 )
 from incubator_paimon_trino_spark.catalog.warehouse import WarehouseCatalog
@@ -43,11 +40,7 @@ from incubator_paimon_trino_spark.streaming.changelog import (
     run_to_completion,
 )
 
-SHARD_OPTS = {
-    "deletion-vectors.enabled": "true",
-    "dv-index.inline-threshold": "0",
-    "dv-index.buckets": "4",
-}
+DV_OPTS = {"deletion-vectors.enabled": "true"}
 
 
 @pytest.fixture()
@@ -55,7 +48,7 @@ def cat(spark, tmp_path):
     return WarehouseCatalog(str(tmp_path / "wh"), spark)
 
 
-def _mk(cat, spark, n=10, options=SHARD_OPTS, name="t"):
+def _mk(cat, spark, n=10, options=DV_OPTS, name="t"):
     cat.create_database("d") if "d" not in cat.list_databases() else None
     cat.create_table(
         "d", name, [("k", "bigint"), ("v", "string")],
@@ -80,13 +73,14 @@ def test_sharded_read_timetravel_and_counts(cat, spark):
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
     tdir = cat._table_dir("d", "t")
     snaps = cat._snapshots(tdir)
-    assert is_sharded(snaps[1].dv) and is_sharded(snaps[2].dv)
+    assert snaps[0].dv is None  # a first commit marks nothing
+    assert [len(load_manifest(tdir, s.dv)) for s in snaps[1:]] == [1, 2]
     assert snaps[1].dv_marks == 7 and snaps[2].dv_marks == 17
     live = sorted((r.k, r.v) for r in cat.read_table("d.t").collect())
     assert live == sorted(
         (i, "upd" if i % 3 == 0 else f"v{i}") for i in range(20) if i % 2 == 1
     )
-    # time travel picks each snapshot's own sharded index
+    # time travel picks each snapshot's own index
     tt = sorted((r.k, r.v) for r in cat.read_table("d.t", version_as_of=2).collect())
     assert tt == sorted((i, "upd" if i % 3 == 0 else f"v{i}") for i in range(20))
     assert cat.read_table("d.t", version_as_of=1).count() == 20
@@ -94,55 +88,35 @@ def test_sharded_read_timetravel_and_counts(cat, spark):
     assert snaps[2].record_count == 10
 
 
-def test_threshold_crossing_inline_to_sharded(cat, spark):
-    """dv-index.inline-threshold = 3: the first small delete stays inline,
-    the one that pushes the cumulative count past 3 rewrites everything
-    into shards; reads are right at every version."""
-    opts = {
-        "deletion-vectors.enabled": "true",
-        "dv-index.inline-threshold": "3",
-        "dv-index.buckets": "4",
-    }
-    _mk(cat, spark, n=12, options=opts)
-    cat.sql("DELETE FROM d.t WHERE k IN (0, 1)")  # 2 marks: inline
-    cat.sql("DELETE FROM d.t WHERE k IN (2, 3, 4)")  # 5 marks: sharded
-    tdir = cat._table_dir("d", "t")
-    snaps = cat._snapshots(tdir)
-    assert not is_sharded(snaps[1].dv) and snaps[1].dv_marks == 2
-    assert is_sharded(snaps[2].dv) and snaps[2].dv_marks == 5
-    assert sorted(r.k for r in cat.read_table("d.t").collect()) == list(range(5, 12))
-    assert sorted(r.k for r in cat.read_table("d.t", version_as_of=2).collect()) == list(range(2, 12))
-    # once sharded, stays sharded even while small
-    cat.sql("DELETE FROM d.t WHERE k = 5")
-    assert is_sharded(cat._snapshots(tdir)[-1].dv)
-    # both streaming modes cross the format change in one history
-    exp = sorted(
-        [("I", i, f"v{i}") for i in range(12)]
-        + [("D", i, f"v{i}") for i in range(6)]
-    )
-    assert _stream_rows(cat, qname="xq1", source_mode="manifest") == exp
-    assert _stream_rows(cat, qname="xq2") == exp
-
-
-def test_carry_forward_rewrites_only_touched_buckets(cat, spark):
-    """A commit's shard rewrite set is the buckets its new marks hash to;
-    every other bucket's shard file carries forward BY NAME (the property
-    the manifest stream's metadata-only diff rests on)."""
+def test_commit_writes_only_its_own_marks(cat, spark):
+    """A commit's delta holds exactly its NEW marks, and every earlier
+    delta carries forward by name, unrewritten (the property both streams
+    rest on: one delta file = one commit's retractions)."""
     _mk(cat, spark, n=40)
-    cat.sql("DELETE FROM d.t WHERE k % 2 = 0")  # broad: marks many buckets
+    cat.sql("DELETE FROM d.t WHERE k % 2 = 0")  # 20 marks
     tdir = cat._table_dir("d", "t")
-    m1 = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
-    assert len(m1["shards"]) >= 2, "need marks in several buckets to carry"
-    # find one live key whose file hashes to exactly one bucket
-    live = cat.read_table("d.t").collect()
-    key = sorted(r.k for r in live)[0]
-    cat.sql(f"DELETE FROM d.t WHERE k = {key}")
-    m2 = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
-    changed = [b for b in m2["shards"] if m2["shards"][b] != m1["shards"].get(b)]
-    assert len(changed) == 1, (m1["shards"], m2["shards"])
-    carried = [b for b in m1["shards"] if b not in changed]
-    assert carried and all(m2["shards"][b] == m1["shards"][b] for b in carried)
-    assert m2["marks"] == m1["marks"] + 1
+    m1 = load_manifest(tdir, cat._snapshots(tdir)[-1].dv)
+    first = m1[0]["files"]
+    stat = {n: os.stat(os.path.join(tdir, "index", n)).st_mtime_ns for n in first}
+    cat.sql("UPDATE d.t SET v = 'upd' WHERE k IN (1, 3, 5)")  # 3 new marks
+    snap = cat._snapshots(tdir)[-1]
+    m2 = load_manifest(tdir, snap.dv)
+    assert [d["files"] for d in m2] == [first, m2[1]["files"]]
+    assert not set(first) & set(m2[1]["files"])
+    assert {n: os.stat(os.path.join(tdir, "index", n)).st_mtime_ns for n in first} == stat
+    own = [
+        r for n in m2[1]["files"]
+        for r in pq.read_table(os.path.join(tdir, "index", n)).to_pylist()
+    ]
+    assert len(own) == 3 and snap.dv_marks == 23
+    data = {os.path.basename(f["path"]) for f in snap.files}
+    assert {r["__dv_file"] for r in own} == set(m2[1]["marked"]) <= data
+    # a commit that marks nothing (new keys only) keeps the index as is
+    cat.insert_into(
+        "d", "t", spark.createDataFrame([(100, "new")], "k bigint, v string")
+    )
+    tip = cat._snapshots(tdir)[-1]
+    assert (tip.dv, tip.dv_marks) == (snap.dv, 23)
 
 
 def test_manifest_stream_equals_files_mode_on_sharded_history(cat, spark):
@@ -162,9 +136,8 @@ def test_manifest_stream_equals_files_mode_on_sharded_history(cat, spark):
 
 
 def test_stream_resume_skips_sharded_baseline(cat, spark):
-    """Consumer resume: the baseline anti-join reads the prior SHARDED
-    index distributed (per-bucket parse tasks) — already-retracted marks
-    are not replayed, in either source mode."""
+    """Consumer resume: marks retracted before the consumer's position
+    (the snapshot-2 delta) are not replayed, in either source mode."""
     _mk(cat, spark)
     cat.sql("UPDATE d.t SET v = 'upd' WHERE k % 3 = 0")  # snapshot 2: marks
     cat.advance_consumer("d", "t", "cdc", 3)
@@ -182,7 +155,7 @@ def test_stream_resume_skips_sharded_baseline(cat, spark):
 def test_gc_vacuum_and_branch_copy_resolve_shards(cat, spark):
     _mk(cat, spark, n=8)
     cat.sql("DELETE FROM d.t WHERE k = 0")  # snapshot 2
-    cat.sql("DELETE FROM d.t WHERE k = 1")  # snapshot 3 (carries 2's buckets)
+    cat.sql("DELETE FROM d.t WHERE k = 1")  # snapshot 3 (carries 2's delta)
     tdir = cat._table_dir("d", "t")
     cat.create_tag("d", "t", "seed", 3)
     cat.create_branch("d", "t", "b1", from_tag="seed")
@@ -190,14 +163,16 @@ def test_gc_vacuum_and_branch_copy_resolve_shards(cat, spark):
     tip = cat._snapshots(tdir)[-1]
     for n in mark_file_names(tdir, tip.dv) + [tip.dv]:
         assert os.path.exists(os.path.join(bdir, "index", n)), n
-    # branch read applies the copied sharded vectors
+    # branch read applies the copied deltas
     assert sorted(r.k for r in cat.read_table("d.t$branch_b1").collect()) == list(range(2, 8))
-    # expiry: keep only the tip — shards still referenced by it survive,
-    # the doomed snapshots' unreferenced files go
+    # expiry: keep only the tip — deltas still referenced by it survive
+    # (snapshot 2's delta carries forward), the doomed manifest goes
     live_names = set(mark_file_names(tdir, tip.dv)) | {tip.dv}
+    assert len(live_names) == 3
+    doomed = cat._snapshots(tdir)[1].dv
     cat.expire_snapshots("d", "t", keep_last=1)
     left = set(os.listdir(os.path.join(tdir, "index")))
-    assert live_names <= left
+    assert live_names <= left and doomed not in left
     assert sorted(r.k for r in cat.read_table("d.t").collect()) == list(range(2, 8))
     # orphan vacuum with a cutoff in the future removes nothing live
     import time as _time
@@ -207,42 +182,19 @@ def test_gc_vacuum_and_branch_copy_resolve_shards(cat, spark):
     assert res["deleted_dv_indexes"] >= 0
 
 
-def test_no_driver_mark_materialization_above_threshold(cat, spark, monkeypatch):
-    """THE r9 pin (verdict item 1): above the inline threshold the commit
-    provably never takes the driver-dict path — the inline fold raises if
-    entered, and the DELETE still commits. Conversely, under the default
-    threshold the sharded writer is provably off the path."""
-    _mk(cat, spark, n=10)  # threshold 0: sharded from the first mark
-
-    def boom(self, *a, **k):
-        raise AssertionError("driver-side inline fold above the threshold")
-
-    monkeypatch.setattr(WarehouseCatalog, "_dv_fold_inline", boom)
+def test_no_driver_mark_materialization_on_commit(cat, spark, monkeypatch):
+    """THE r9 pin (verdict item 1): a DV commit never holds the mark set
+    on the driver — the driver-side dict (_dv_vectors) raises if entered,
+    and the DELETE still commits and reads back right."""
+    _mk(cat, spark, n=10)
     monkeypatch.setattr(
         WarehouseCatalog,
         "_dv_vectors",
         lambda *a, **k: (_ for _ in ()).throw(AssertionError("_dv_vectors on commit path")),
     )
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
+    cat.sql("UPDATE d.t SET v = 'x' WHERE k = 1")
     assert sorted(r.k for r in cat.read_table("d.t").collect()) == [1, 3, 5, 7, 9]
-    monkeypatch.undo()
-
-    # inline table: the sharded writer must not be entered
-    cat.create_table(
-        "d", "inl", [("k", "bigint"), ("v", "string")],
-        primary_key=["k"], options={"deletion-vectors.enabled": "true"},
-    )
-    cat.insert_into(
-        "d", "inl", spark.createDataFrame([(i, "x") for i in range(5)], "k bigint, v string")
-    )
-    monkeypatch.setattr(
-        WarehouseCatalog,
-        "_dv_write_shards",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("sharded writer under threshold")),
-    )
-    cat.sql("DELETE FROM d.inl WHERE k = 2")
-    snaps = cat._snapshots(cat._table_dir("d", "inl"))
-    assert not is_sharded(snaps[-1].dv) and snaps[-1].dv_marks == 1
 
 
 def test_compaction_resets_sharded_index(cat, spark):
@@ -261,56 +213,23 @@ def test_compaction_resets_sharded_index(cat, spark):
 
 
 def test_mark_free_snapshot_skips_dv_antijoin(cat, spark, monkeypatch):
-    """r8 ADVICE: a DV-table snapshot whose index holds no marks
-    (dv_marks == 0 — every DV commit records the count) must read without
-    the position columns and anti-join entirely."""
-    _mk(cat, spark, n=6)  # snapshot 1: empty index, dv_marks == 0
+    """r8 ADVICE: a DV-table snapshot without marks (no index: a first
+    commit, or later commits of new keys only) must read without the
+    position columns and anti-join entirely."""
+    _mk(cat, spark, n=6)  # snapshot 1: no index
+    cat.insert_into(
+        "d", "t", spark.createDataFrame([(6, "v6")], "k bigint, v string")
+    )  # snapshot 2: new key, marks nothing
     tdir = cat._table_dir("d", "t")
-    assert cat._snapshots(tdir)[-1].dv_marks == 0
+    assert [s.dv for s in cat._snapshots(tdir)] == [None, None]
 
     def boom(self, *a, **k):
         raise AssertionError("_dv_marks_df on a mark-free snapshot read")
 
     monkeypatch.setattr(WarehouseCatalog, "_dv_marks_df", boom)
-    assert cat.read_table("d.t").count() == 6
+    assert cat.read_table("d.t").count() == 7
     plan = cat.read_table("d.t")._jdf.queryExecution().executedPlan().toString()
     assert "__dv_pos" not in plan and "row_index" not in plan
-
-
-def test_oversized_bucket_splits_into_sub_shards(cat, spark):
-    """r9 review: one shard document aggregates into ONE JSON string, so a
-    bucket whose rewrite exceeds dv-index.max-marks-per-shard splits into
-    sub-shard files (by data-file hash) — readers union marks across a
-    bucket's file LIST, so results are unchanged."""
-    cat.create_database("d")
-    cat.create_table(
-        "d", "big", [("k", "bigint"), ("v", "string")],
-        primary_key=["k"],
-        options={
-            "deletion-vectors.enabled": "true",
-            "dv-index.inline-threshold": "0",
-            "dv-index.buckets": "1",        # force everything into one bucket
-            "dv-index.max-marks-per-shard": "10",
-        },
-    )
-    cat.insert_into(
-        "d", "big",
-        spark.createDataFrame([(i, f"v{i}") for i in range(60)], "k bigint, v string")
-        .repartition(6),  # several data files → sub-split has hash spread
-    )
-    cat.sql("DELETE FROM d.big WHERE k % 2 = 0")  # 30 marks, 1 bucket
-    tdir = cat._table_dir("d", "big")
-    m = load_index_meta(tdir, cat._snapshots(tdir)[-1].dv)
-    assert m["marks"] == 30 and list(m["shards"]) == [0]
-    assert len(m["shards"][0]) >= 2, m["shards"]  # split happened
-    assert sorted(r.k for r in cat.read_table("d.big").collect()) == [
-        i for i in range(60) if i % 2 == 1
-    ]
-    # the manifest stream diffs the multi-file bucket correctly
-    got = _stream_rows(cat, "d.big", qname="subq", source_mode="manifest")
-    assert [g for g in got if g[0] == "D"] == [
-        ("D", i, f"v{i}") for i in range(60) if i % 2 == 0
-    ]
 
 
 def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
@@ -358,9 +277,8 @@ def test_mark_scan_prunes_by_batch_key_range(cat, spark, monkeypatch):
 
 def test_sharded_dv_randomized_model(cat, spark):
     """Model-based randomized pin: a seeded mix of inserts, upserts,
-    deletes, and compactions over a DV table with tiny threshold/bucket/
-    sub-shard settings (so every format transition and split triggers at
-    toy scale) must always read back equal to a plain dict model — and
+    deletes, and compactions over a DV table (deltas accumulating and
+    resetting) must always read back equal to a plain dict model — and
     time travel must replay any earlier state exactly."""
     import random
 
@@ -369,12 +287,7 @@ def test_sharded_dv_randomized_model(cat, spark):
     cat.create_table(
         "d", "mdl", [("k", "bigint"), ("v", "string")],
         primary_key=["k"],
-        options={
-            "deletion-vectors.enabled": "true",
-            "dv-index.inline-threshold": "2",
-            "dv-index.buckets": "3",
-            "dv-index.max-marks-per-shard": "4",
-        },
+        options=DV_OPTS,
     )
     model: dict[int, str] = {}
     history: list[dict[int, str]] = []  # model state per snapshot id

@@ -2,8 +2,8 @@
 
 A DV table's deletes are pure metadata (no -D data rows), so the plain file
 tail would silently drop them; ``read_changelog_stream`` unions the tail's
-+rows with a retraction stream diffed from the tailed ``index/dv-*.json``
-files (``streaming/changelog._dv_retraction_stream``). These tests pin
++rows with a retraction stream read from the tailed ``index/dv-*.parquet``
+delta files (``streaming/changelog._dv_retraction_stream``). These tests pin
 
 - the full availableNow stream equals insert images + DV-marked old images,
 - consumer/from-snapshot resume replays neither consumed +rows nor the
@@ -102,7 +102,7 @@ def test_dv_retraction_static_side_reads_only_marked_files(cat, spark):
     cat.sql("DELETE FROM d.t WHERE k = 3")  # marks exactly one position
     tdir = cat._table_dir("d", "t")
     snaps = cat._snapshots(tdir)
-    entries = _dv_referenced_entries(cat, tdir, snaps)
+    entries = _dv_referenced_entries(tdir, snaps)
     live = {os.path.basename(f["path"]) for f in snaps[-1].files}
     assert entries, "delete must reference at least one file"
     assert set(entries) < live, "static side must be a strict subset of live files"
@@ -114,9 +114,10 @@ def test_dv_retraction_static_side_reads_only_marked_files(cat, spark):
 
 def test_dv_stream_per_commit_triggers_dedup_across_batches(cat, spark):
     """max_files_per_trigger=1 splits the availableNow run into many
-    micro-batches; the streaming dropDuplicates state must still emit each
-    cumulative mark exactly once across them, and the total content must
-    equal the single-batch run."""
+    micro-batches; each mark lives in exactly one delta file, so every mark
+    is emitted exactly once across them without dedup state, and the total
+    content must equal the single-batch run. (The name predates the
+    per-commit delta files, when cumulative indexes needed dropDuplicates.)"""
     _mk(cat, spark)
     cat.sql("UPDATE d.t SET v = 'upd' WHERE k % 3 = 0")
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
@@ -265,21 +266,25 @@ def test_advance_consumer_nonstrict_noop(cat, spark):
 
 
 def test_dv_stream_ignores_orphan_index(cat, spark):
-    """An uncommitted dv-*.json (crashed or racing writer — vacuum keeps it
-    while above the horizon) must not emit phantom retractions: only indexes
-    a snapshot references may retract."""
-    from incubator_paimon_trino_spark.catalog.metadata import write_json_atomic
+    """An uncommitted dv-*.parquet delta (crashed or racing writer — vacuum
+    keeps it while above the horizon) must not emit phantom retractions:
+    only deltas a snapshot's manifest lists may retract."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from incubator_paimon_trino_spark.streaming.changelog import _dv_referenced_entries
 
     _mk(cat, spark, n=6)
     cat.sql("DELETE FROM d.t WHERE k = 1")  # committed delete (snapshot 2)
     tdir = cat._table_dir("d", "t")
     snaps = cat._snapshots(tdir)
-    victim = next(f["path"] for f in snaps[-1].files)
-    # orphan at version 2 with a different nonce, marking a LIVE row
-    write_json_atomic(
-        os.path.join(tdir, "index", "dv-2-deadbeef.json"),
-        {"vectors": {victim: [0]}},
+    victim = os.path.basename(next(f["path"] for f in snaps[-1].files))
+    # orphan at version 2 with a different nonce, marking every row of a
+    # LIVE file — read by the tail's glob, so only the committed filter
+    # keeps it out
+    pq.write_table(
+        pa.table({"__dv_file": [victim] * 6, "__dv_pos": list(range(6))}),
+        os.path.join(tdir, "index", "dv-2-deadbeef-0.parquet"),
     )
     rows = _rows(cat, qname="dv_orphan")
     assert [r for r in rows if r[0] == "D"] == [("D", 1, "v1")]
@@ -287,15 +292,15 @@ def test_dv_stream_ignores_orphan_index(cat, spark):
     # unless a committed index also names it
     dv = cat._dv_vectors(tdir, snaps[-1])
     committed_files = {os.path.basename(rel) for rel in dv}
-    assert set(_dv_referenced_entries(cat, tdir, snaps)) == committed_files
+    assert set(_dv_referenced_entries(tdir, snaps)) == committed_files
 
 
 def test_resume_baseline_never_transits_driver(cat, spark, monkeypatch):
-    """Scale pin (r7 'what's wrong' #1): the resume anti-join's baseline
-    side is a Spark read of the prior snapshot's committed index — NOT a
-    driver-held dict. _dv_vectors (the driver-side materialization) must
-    not be called anywhere in the stream build or its execution; the
-    resume semantics must be unchanged."""
+    """Scale pin (r7 'what's wrong' #1): a resume is a version filter on
+    the tailed delta files — no mark set is ever held on the driver.
+    _dv_vectors (the driver-side materialization) must not be called
+    anywhere in the stream build or its execution; the resume semantics
+    must be unchanged."""
     _mk(cat, spark)
     cat.sql("UPDATE d.t SET v = 'upd' WHERE k % 3 = 0")  # snapshot 2
     cat.advance_consumer("d", "t", "cdc", 3)  # 1..2 consumed downstream

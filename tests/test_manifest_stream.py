@@ -56,12 +56,9 @@ def _rows(cat, name="d.t", qname="mq", cols=("_row_kind", "k", "v"), **kw):
 
 def test_manifest_equals_files_mode_on_dv_history(cat, spark):
     """availableNow over insert+update+delete: row-identical to the files
-    mode on (kind, key, image, _seq). _dv_ver is compared structurally:
-    the manifest mode attributes each mark to its EXACT retracting commit,
-    while the files mode's one-batch dropDuplicates survivor only bounds
-    it (cumulative indexes repeat marks — documented in
-    _dv_retraction_stream), so files-mode _dv_ver must be >= the exact
-    attribution and <= the batch tip."""
+    mode on (kind, key, image, _seq) — and on _dv_ver: each delta file
+    holds one commit's marks, so both modes attribute every retraction to
+    its exact retracting commit."""
     _mk_dv(cat, spark)
     cat.sql("UPDATE d.t SET v = 'upd' WHERE k % 3 = 0")
     cat.sql("DELETE FROM d.t WHERE k % 2 = 0")
@@ -80,7 +77,7 @@ def test_manifest_equals_files_mode_on_dv_history(cat, spark):
     }
     for r in files_out:
         if r["_row_kind"] == "D":
-            assert exact[(r["k"], r["v"])] <= r["_dv_ver"] <= 3
+            assert exact[(r["k"], r["v"])] == r["_dv_ver"]
 
 
 def test_manifest_plain_pk_and_append_tables(cat, spark):
@@ -366,16 +363,19 @@ def test_avro_pk_table_streams_renamed_history_via_manifest(cat, spark):
 
 
 def test_orphan_index_never_planned(cat, spark):
-    """An uncommitted dv-*.json is invisible to the manifest planner (it
-    plans from snapshot.dv references only) — no phantom retractions."""
-    from incubator_paimon_trino_spark.catalog.metadata import write_json_atomic
+    """An uncommitted dv-*.parquet delta is invisible to the manifest
+    planner (it plans from snapshot.dv manifests only) — no phantom
+    retractions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     _mk_dv(cat, spark, n=4)
     cat.sql("DELETE FROM d.t WHERE k = 1")
     tdir = cat._table_dir("d", "t")
-    victim = next(f["path"] for f in cat._snapshots(tdir)[-1].files)
-    write_json_atomic(
-        os.path.join(tdir, "index", "dv-2-deadbeef.json"), {"vectors": {victim: [0]}}
+    victim = os.path.basename(next(f["path"] for f in cat._snapshots(tdir)[-1].files))
+    pq.write_table(
+        pa.table({"__dv_file": [victim] * 4, "__dv_pos": list(range(4))}),
+        os.path.join(tdir, "index", "dv-2-deadbeef-0.parquet"),
     )
     got = _rows(cat, qname="m_orphan")
     assert [r for r in got if r[0] == "D"] == [("D", 1, "v1")]
